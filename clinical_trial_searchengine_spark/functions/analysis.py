@@ -497,10 +497,13 @@ def analyze_flat_arrow(strings, mode: str = "standard"):
             return _empty()
     else:
         # Unicode fallback: split on the token-charset complement ==
-        # findall('[a-z0-9]+') with empty tokens dropped below
-        lists = pc.split_pattern_regex(
-            pc.utf8_lower(strings), pattern="[^a-z0-9]+"
+        # findall('[a-z0-9]+') with empty tokens dropped below.  Arrow's
+        # simple lowercase maps U+0130 to "i"; Python's str.lower() gives
+        # "i" + U+0307 (a separator), so spell that out first.
+        lowered = pc.utf8_lower(
+            pc.replace_substring(strings, "\u0130", "i\u0307")
         )
+        lists = pc.split_pattern_regex(lowered, pattern="[^a-z0-9]+")
         counts = pc.fill_null(pc.list_value_length(lists), 0)
         counts = counts.to_numpy().astype(np.int64)
         flat = pc.list_flatten(lists)

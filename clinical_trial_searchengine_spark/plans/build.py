@@ -1,16 +1,20 @@
 """Index build: corpus -> compressed doc-sharded segments.
 
-Single logical DAG (SURVEY.md §3.4), all vectorized:
+One build path for every mode and every multifield sub-build (SURVEY.md
+§3.4), all vectorized:
 
-  read corpus -> sha256 invariant check -> deterministic doc_id assignment
-  -> tokenizer mapInArrow kernel emitting FLAT (doc_id, term, tf) rows
-  -> doc_meta + global stats + GLOBAL per-term df/cf
-  -> salted shuffle: groupBy(shard, term_bucket, salt) -> bucket encode
-     kernel (delta + varint + block-max metadata, functions/codec.py)
+  read corpus -> deterministic doc_id assignment
+  -> doc_meta scan: metadata + sha256 invariant + doc_len (JVM token-count
+     expression) in one projection -> global stats
+  -> pack kernel (mapInArrow): tokenize, key every (doc, term) pair by
+     (shard, term_bucket, salt), emit one row of flat buffers per group
+  -> packed shuffle: groupBy(shard, term_bucket, salt) -> unpack + encode
+     kernel (delta + varint/pfor + block-max metadata, functions/codec.py)
   -> shard shuffle + (shard, term, salt) sort -> inline salted-run merge
-     in the SAME task -> write postings (partitioned by shard), norms,
-     manifest, metrics.  ONE streaming pass from encode to parquet: no
-     persist of the encoded relation, no second read, no hot-term shuffle.
+     in the SAME task -> write postings (partitioned by shard)
+  -> term_stats and norms from the written parquet, manifest, metrics.
+     ONE streaming pass from tokenize to parquet: no persist of the pairs
+     or the encoded relation, no second read, no hot-term shuffle.
 
 Scale + performance notes (the part that matters at 10^12 docs):
 * doc_id = global rank under (repo, path, commit): ONE range shuffle +
@@ -18,16 +22,16 @@ Scale + performance notes (the part that matters at 10^12 docs):
   per-partition offset table.  Rank is independent of partition boundaries,
   so resume/rerun reassigns identical ids; no global window, no second
   exchange.
-* The tokenizer emits flat columns (one row per (doc, distinct term)), never
-  nested array<struct> — Arrow-friendly, and ~50x fewer rows than exploding
-  raw tokens (tf is counted inside the kernel, A8).
+* The pack kernel counts tf per (doc, distinct term) in-kernel (A8) and
+  ships each group's pairs as flat binary buffers: the encode exchange
+  moves ~500x fewer rows than one row per pair.
 * The encode kernel processes a whole (shard, term_bucket, salt) group and
   encodes each term with NumPy inside — thousands of terms per group
-  amortize the per-group Arrow/pandas overhead that a per-term grouping
-  would pay 10^8 times at scale.  term_buckets caps group memory.
+  amortize the per-group Arrow overhead that a per-term grouping would pay
+  10^8 times at scale.  term_buckets caps group memory.
 * Hot terms ('def', 'the', ...; reference-domain analogues 'patient',
-  'trial') are salted into contiguous doc_id sub-ranges before the encode
-  shuffle; only salted runs go through the merge kernel, everything else
+  'trial') are salted into contiguous doc_id sub-ranges inside the pack
+  kernel; only salted runs go through the merge kernel, everything else
   bypasses it.  Salted == unsalted output byte-identically (property-tested).
 * Per-term df/cf are EXACT GLOBAL sums of the encode kernels' partial counts,
   stored in the term_stats dictionary (never per-shard — per-shard stats
@@ -47,7 +51,6 @@ Scale + performance notes (the part that matters at 10^12 docs):
 from __future__ import annotations
 
 import contextlib
-import itertools
 import math
 import time
 
@@ -57,10 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from clinical_trial_searchengine_spark.functions.analysis import (
-    analyze_batch,
-    analyze_flat,
-)
+from clinical_trial_searchengine_spark.functions.analysis import STOPWORDS
 from clinical_trial_searchengine_spark.functions.codec import (
     encode_postings,
     encode_postings_group,
@@ -212,158 +212,51 @@ def assign_doc_ids(
 # ---------------------------------------------------------------------------
 
 
+# Code points outside ASCII whose Python ``str.lower()`` holds a token
+# character: KELVIN SIGN lowers to "k", and U+0130 (I WITH DOT ABOVE) to
+# "i" + U+0307, whose combining dot then ends the token.  Java's (?i) folds
+# ASCII only, so the JVM token regex names both explicitly.
+_KELVIN, _I_DOT = "\u212a", "\u0130"
+_TOKEN_REGEX = rf"(?i)[a-z0-9{_KELVIN}]+{_I_DOT}?|{_I_DOT}"
+
+
+# Whole tokens that are stopwords (the porter filter), for regexp_count.  A
+# token character — or U+0130, whose "i" would extend the token — next to
+# the word makes it part of a longer token.  The leading first-letter
+# lookahead rejects most positions before the lookbehind runs (measured ~2x
+# faster than without it).
+_STOP_FIRST = "".join(sorted({w[0] for w in STOPWORDS}))
+_STOP_WORDS = "|".join(sorted(STOPWORDS))
+_STOPWORD_REGEX = (
+    rf"(?i)(?=[{_STOP_FIRST}])(?<![a-z0-9{_KELVIN}])(?:{_STOP_WORDS})"
+    rf"(?![a-z0-9{_KELVIN}{_I_DOT}])"
+)
+
+
 def _make_doc_len_col(mode: str):
-    """doc_len = analyzed token count.  standard mode is a pure JVM
-    expression; porter needs the Python kernel (stopword filter changes the
-    count).  Both match analyze_batch exactly."""
-    if mode == "standard":
-        # token count WITHOUT materializing tokens: count maximal alnum
-        # runs directly.  regexp_count never builds an output string
-        # (the previous collapse-to-marker + translate form emitted a
-        # full rewritten copy of the content per row — measured 2.2x
-        # slower on the 500k-doc pass; the even older regexp_extract_all
-        # form materialized a java.lang.String per token, ~1.6 ms/doc).
-        # Values are identical: both count maximal case-insensitive
-        # [a-z0-9]+ runs (verified 0 mismatches over the bench corpus).
-        return F.regexp_count(
-            F.col("content"), F.lit(r"(?i)[a-z0-9]+")
-        ).cast("int")
+    """doc_len = analyzed token count as a pure JVM expression (no Python
+    worker, no lowered copy of the content), equal to analyze_batch's
+    count in both modes (property-tested).  porter subtracts the
+    whole-token stopword matches: stemming never changes the count.
 
-    @F.pandas_udf("int")
-    def _dl(texts: pd.Series) -> pd.Series:
-        _, lens = analyze_batch(texts, mode)
-        return pd.Series(lens, dtype="int32")
-
-    return _dl(F.col("content"))
-
-
-def make_tokenize_pairs_kernel(mode: str, emit_doc_len: bool = False):
-    """mapInPandas kernel: (doc_id, content) batches -> flat
-    (doc_id, term, tf) rows, tf counted in-kernel, terms sorted per doc.
-
-    With ``emit_doc_len`` each doc additionally yields ONE sentinel row
-    ``(doc_id, term=NULL, tf=doc_len)`` — doc lengths then ride out of the
-    single tokenize pass for free instead of needing a groupBy(doc_id)
-    shuffle over every (doc, term) pair (A7/A8, SURVEY.md §2.4)."""
-
-    def kernel(batches):
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            row_idx, terms, tfs, lens = analyze_flat(pdf["content"], mode)
-            out = pd.DataFrame(
-                {
-                    "doc_id": doc_ids[row_idx],
-                    "term": terms,
-                    "tf": tfs.astype(np.int32),
-                }
-            )
-            if emit_doc_len:
-                sentinels = pd.DataFrame(
-                    {
-                        "doc_id": doc_ids,
-                        "term": pd.array([None] * len(doc_ids), dtype=object),
-                        "tf": lens.astype(np.int32),
-                    }
-                )
-                out = pd.concat([out, sentinels], ignore_index=True)
-            yield out
-
-    return kernel
-
-
-def make_tokenize_pairs_kernel_arrow(mode: str, emit_doc_len: bool = False):
-    """mapInArrow twin of :func:`make_tokenize_pairs_kernel` — the default
-    build tokenize path.
-
-    Runs :func:`analyze_flat_arrow` straight on the Arrow batch: byte-LUT /
-    Arrow-kernel tokenize + dictionary encode, no pandas Series, no
-    per-token Python string.  Output rows are identical (property-tested via
-    analyze_flat_arrow == analyze_flat); measured 2.1-2.4x faster per
-    thread and — the scaling-efficiency point — allocation-free per token,
-    so 32 workers sharing one socket stop fighting the allocator and the
-    memory bus for PyObject traffic."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from clinical_trial_searchengine_spark.functions.analysis import (
-        analyze_flat_arrow,
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = (
-                batch.column(names.index("doc_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            row_idx, dict_idx, dictionary, tfs, lens = analyze_flat_arrow(
-                batch.column(names.index("content")), mode
-            )
-            out_doc = pa.array(doc_ids[row_idx], type=pa.int64())
-            out_term = pc.take(dictionary, pa.array(dict_idx, type=pa.int64()))
-            out_tf = pa.array(tfs.astype(np.int32), type=pa.int32())
-            if emit_doc_len:
-                out_doc = pa.concat_arrays(
-                    [out_doc, pa.array(doc_ids, type=pa.int64())]
-                )
-                out_term = pa.concat_arrays(
-                    [out_term, pa.nulls(len(doc_ids), type=pa.string())]
-                )
-                out_tf = pa.concat_arrays(
-                    [out_tf, pa.array(lens.astype(np.int32), type=pa.int32())]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [out_doc, out_term, out_tf], names=["doc_id", "term", "tf"]
-            )
-
-    return kernel
-
-
-def _encode_bucket_group(pdf: pd.DataFrame,
-                         codec: str = "varint") -> pd.DataFrame:
-    """Encode every term inside one (shard, term_bucket, salt) group.
-
-    Sort once by (term, doc_id), then slice per term — NumPy throughout.
-    Terms are factorized to int codes first: lexsort on two int arrays is
-    several times cheaper (and far lighter on memory bandwidth) than a
-    pandas string sort, which matters when many workers share one socket."""
-    shard = int(pdf["shard"].iloc[0])
-    salt = int(pdf["salt"].iloc[0])
-    codes, uniques = pd.factorize(pdf["term"], sort=True)
-    order = np.lexsort((pdf["doc_id"].to_numpy(), codes))
-    codes = codes[order]
-    terms = uniques.to_numpy()
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.uint64)[order]
-    tfs = pdf["tf"].to_numpy(dtype=np.uint64)[order]
-    # term boundaries on the sorted code column
-    change = np.flatnonzero(np.concatenate(([True], codes[1:] != codes[:-1])))
-    bounds = np.concatenate((change, [len(codes)]))
-    # whole-group batch encode: one varint pass over every term's postings
-    # (byte-identical to per-term encode_postings — property-tested in
-    # tests/test_codec.py; measured 6x faster than the per-term loop, which
-    # pays small-array numpy overhead once per term)
-    out_post, out_nb = encode_postings_group(doc_ids, tfs, bounds,
-                                             codec=codec)
-    return pd.DataFrame(
-        {
-            "shard": np.full(len(change), shard, dtype=np.int32),
-            "term": terms[codes[change]],
-            "salt": np.full(len(change), salt, dtype=np.int32),
-            "n_postings": np.diff(bounds),
-            "cf_local": np.add.reduceat(tfs, change).astype(np.int64),
-            "n_blocks": out_nb.astype(np.int32),
-            "postings": list(out_post),
-        }
-    )
+    regexp_count never builds an output string (a collapse-to-marker +
+    translate form emitted a rewritten copy of the content per row —
+    measured 2.2x slower on the 500k-doc pass; the older
+    regexp_extract_all form materialized a java.lang.String per token,
+    ~1.6 ms/doc)."""
+    n = F.regexp_count(F.col("content"), F.lit(_TOKEN_REGEX))
+    if mode == "porter":
+        n = n - F.regexp_count(F.col("content"), F.lit(_STOPWORD_REGEX))
+    elif mode != "standard":
+        raise ValueError(f"unknown analyzer mode: {mode}")
+    return n.cast("int")
 
 
 def _encode_term_arrays(shard, salt, term_array, doc_ids, tfs,
                         codec: str = "varint"):
-    """Shared encode body: one group's (term StringArray, doc_ids uint64,
-    tfs uint64) -> encoded per-term rows (term-ascending), the single
-    source of truth for both the pair-row encode path and the packed
-    shuffle path (byte identity between them is by construction)."""
+    """Encode body: one group's (term StringArray, doc_ids uint64, tfs
+    uint64) -> encoded per-term rows (term-ascending, doc_ids ascending
+    within a term, whatever the input row order)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -399,43 +292,8 @@ def _encode_term_arrays(shard, salt, term_array, doc_ids, tfs,
     )
 
 
-def _encode_bucket_group_arrow(table, codec: str = "varint"):
-    """applyInArrow twin of :func:`_encode_bucket_group` — the pair-row
-    encode path (non-fused builds).  Same output rows in the same
-    (term-ascending) order, property-tested; the win is that the group's
-    term column never becomes a pandas object array (one PyObject per
-    (doc, term) pair), it stays an Arrow buffer dictionary-encoded in
-    C++.  Like the Arrow tokenizer this removes per-row allocator/
-    memory-bus traffic, which is what limits multi-executor build scaling
-    on one socket."""
-    shard = table.column("shard")[0].as_py()
-    salt = table.column("salt")[0].as_py()
-    doc_ids = (
-        table.column("doc_id").combine_chunks()
-        .to_numpy(zero_copy_only=False).astype(np.uint64)
-    )
-    tfs = (
-        table.column("tf").combine_chunks()
-        .to_numpy(zero_copy_only=False).astype(np.uint64)
-    )
-    return _encode_term_arrays(
-        shard, salt, table.column("term").combine_chunks(), doc_ids, tfs,
-        codec,
-    )
-
-
-def _make_encode_bucket_group_arrow(codec: str = "varint"):
-    """Closure wrapper for applyInArrow (which introspects the callable, so
-    a functools.partial won't do)."""
-
-    def _encode(table):
-        return _encode_bucket_group_arrow(table, codec)
-
-    return _encode
-
-
 # ---------------------------------------------------------------------------
-# packed encode shuffle (fused standard builds)
+# packed encode shuffle
 # ---------------------------------------------------------------------------
 
 # One row per (map task, shard, term_bucket, salt): all of that group's
@@ -452,9 +310,13 @@ _PACK_SCHEMA = (
 
 
 def _string_array_parts(arr):
-    """(data uint8[], starts int64[], lens int64[]) of a utf8 pa.Array."""
-    import pyarrow as pa  # noqa: F401
+    """(data uint8[], starts int64[], lens int64[]) of a utf8 pa.Array.
+    Reads the offsets as int32, so any type but ``pa.string()`` (e.g.
+    ``large_string``'s int64 offsets) raises instead of being misread."""
+    import pyarrow as pa
 
+    if arr.type != pa.string():
+        raise TypeError(f"expected a pa.string() array, got {arr.type}")
     arr = arr.combine_chunks() if hasattr(arr, "combine_chunks") else arr
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=np.int32)[
@@ -470,29 +332,27 @@ def make_tokenize_pack_kernel_arrow(
 ):
     """mapInArrow kernel: (doc_id, content) batches -> packed group rows.
 
-    Tokenizes like :func:`make_tokenize_pairs_kernel_arrow`, then — instead
-    of emitting one row per (doc, term) pair into the exchange — assigns
-    each pair its (shard, term_bucket, salt) key IN the kernel (bucket =
-    crc32(term) % buckets via the vectorized dictionary hash) and packs
-    each group's pairs into one row of flat buffers.  Term strings stay
-    Arrow buffers end to end (per-pair materialization is a C++
-    ``pc.take`` + slice).
+    Tokenizes each batch with :func:`analyze_flat_arrow` (byte-LUT / Arrow
+    kernels, no per-token Python string), then — instead of emitting one
+    row per (doc, term) pair into the exchange — assigns each pair its
+    (shard, term_bucket, salt) key IN the kernel (bucket = crc32(term) %
+    buckets via the vectorized dictionary hash) and packs each group's
+    pairs into one row of flat buffers.  Term strings stay Arrow buffers
+    end to end (per-pair materialization is a C++ ``pc.take`` + slice).
+    Yields one packed RecordBatch per input batch, so worker memory is
+    bounded by the batch size, not the partition: the encode groupBy
+    concatenates however many packed rows a group gets.
 
     Hot-term salting is decided PER BATCH from local density: est_df =
     batch term count x (n_docs / batch docs); n_salts = clamp(ceil(est /
-    hot_df_threshold), 1, max_salts); salt = the same int64-product /
-    float64-divide / truncate expression as the driver plan.  This
-    replaces the driver's sampled salt-plan pre-pass (a whole extra
-    tokenize job per build) — it CAN disagree across batches for
+    hot_df_threshold), 1, max_salts); salt = (doc_id % shard_size) x
+    n_salts / shard_size, truncated.  It CAN disagree across batches for
     borderline terms, which is free: salting only decides grouping, and
-    the write-pass merge kernel already reconciles ARBITRARY runs of a
-    (shard, term) into byte-identical postings (argsort by unique
-    doc_ids — the same property that makes salted == unsalted).
-
-    The bucket function differs from the pair-row path's xxhash64 — it
-    only decides GROUPING, never bytes: every pair of a term keeps one
-    bucket, the write pass re-buckets encoded rows with the JVM hash as
-    before.
+    the write-pass merge kernel reconciles ARBITRARY runs of a (shard,
+    term) into byte-identical postings (argsort by unique doc_ids — the
+    same property that makes salted == unsalted).  The bucket likewise
+    only decides grouping: every pair of a term keeps one bucket, and the
+    write pass re-buckets encoded rows with the JVM hash.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -504,71 +364,47 @@ def make_tokenize_pack_kernel_arrow(
         crc32_many,
     )
 
-    def kernel(batches):
-        term_parts = []
-        did_parts, tf_parts = [], []
-        shard_parts, bucket_parts, salt_parts = [], [], []
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = (
-                batch.column(names.index("doc_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            row_idx, dict_idx, dictionary, tfs, _ = analyze_flat_arrow(
-                batch.column(names.index("content")), mode
-            )
-            if len(dict_idx) == 0:
-                continue
-            dict_idx = np.asarray(dict_idx, dtype=np.int64)
-            # per-TERM bucket + n_salts, computed once per batch vocab
-            data, starts, lens = _string_array_parts(dictionary)
-            b_term = (
-                crc32_many(data, starts, lens).astype(np.int64)
-                % term_buckets
-            ).astype(np.int32)
-            # local-density salt estimate (see docstring): df_est =
-            # batch df x corpus/batch doc ratio.  Uses per-batch DISTINCT
-            # doc count per term == bincount of the (doc, term) pairs.
-            n_batch_docs = max(1, len(doc_ids))
-            cnt = np.bincount(dict_idx, minlength=len(dictionary))
-            est = cnt * (float(n_docs) / n_batch_docs)
-            ns_term = np.ones(len(dictionary), dtype=np.int64)
-            hot = est > hot_df_threshold
-            if hot.any():
-                ns_term[hot] = np.minimum(
-                    max_salts,
-                    np.ceil(est[hot] / hot_df_threshold).astype(np.int64),
-                )
-            dids = doc_ids[row_idx]
-            local = dids % shard_size
-            ns = ns_term[dict_idx]
-            term_parts.append(
-                pc.take(dictionary, pa.array(dict_idx, type=pa.int64()))
-            )
-            did_parts.append(dids)
-            tf_parts.append(np.asarray(tfs, dtype=np.int32))
-            shard_parts.append((dids // shard_size).astype(np.int32))
-            bucket_parts.append(b_term[dict_idx])
-            salt_parts.append(
-                ((local * ns).astype(np.float64) / shard_size).astype(
-                    np.int32
-                )
-            )
-        if not did_parts:
-            return
-        terms = pa.concat_arrays(
-            [t.combine_chunks() if hasattr(t, "combine_chunks") else t
-             for t in term_parts]
+    def _pack(batch):
+        names = batch.schema.names
+        doc_ids = (
+            batch.column(names.index("doc_id"))
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64)
         )
-        dids = np.concatenate(did_parts)
-        tfs = np.concatenate(tf_parts)
-        shards = np.concatenate(shard_parts)
-        buckets = np.concatenate(bucket_parts)
-        salts = np.concatenate(salt_parts)
+        row_idx, dict_idx, dictionary, tfs, _ = analyze_flat_arrow(
+            batch.column(names.index("content")), mode
+        )
+        if len(dict_idx) == 0:
+            return None
+        dict_idx = np.asarray(dict_idx, dtype=np.int64)
+        # per-TERM bucket + n_salts, computed once per batch vocab
+        data, starts, lens = _string_array_parts(dictionary)
+        b_term = (
+            crc32_many(data, starts, lens).astype(np.int64) % term_buckets
+        ).astype(np.int32)
+        # local-density salt estimate (see docstring): df_est = batch df x
+        # corpus/batch doc ratio.  Uses per-batch DISTINCT doc count per
+        # term == bincount of the (doc, term) pairs.
+        cnt = np.bincount(dict_idx, minlength=len(dictionary))
+        est = cnt * (float(n_docs) / max(1, len(doc_ids)))
+        ns_term = np.ones(len(dictionary), dtype=np.int64)
+        hot = est > hot_df_threshold
+        if hot.any():
+            ns_term[hot] = np.minimum(
+                max_salts,
+                np.ceil(est[hot] / hot_df_threshold).astype(np.int64),
+            )
+        dids = doc_ids[row_idx]
+        shards = (dids // shard_size).astype(np.int32)
+        buckets = b_term[dict_idx]
+        salts = (
+            ((dids % shard_size) * ns_term[dict_idx]).astype(np.float64)
+            / shard_size
+        ).astype(np.int32)
         order = np.lexsort((salts, buckets, shards))
-        terms = pc.take(terms, pa.array(order))
-        dids, tfs = dids[order], tfs[order]
+        terms = pc.take(dictionary, pa.array(dict_idx[order]))
+        dids = dids[order]
+        tfs = np.asarray(tfs, dtype=np.int32)[order]
         shards, buckets, salts = shards[order], buckets[order], salts[order]
         key = (
             shards.astype(np.int64) << 40
@@ -587,15 +423,13 @@ def make_tokenize_pack_kernel_arrow(
             rows["shard"].append(int(shards[s]))
             rows["bucket"].append(int(buckets[s]))
             rows["salt"].append(int(salts[s]))
-            rows["term_lens"].append(
-                t_lens[s:e].astype(np.int32).tobytes()
-            )
+            rows["term_lens"].append(t_lens[s:e].astype(np.int32).tobytes())
             b0 = int(t_starts[s])
-            b1 = int(t_starts[e - 1] + t_lens[e - 1]) if e > s else b0
+            b1 = int(t_starts[e - 1] + t_lens[e - 1])
             rows["term_data"].append(t_data[b0:b1].tobytes())
             rows["doc_ids"].append(dids[s:e].tobytes())
             rows["tfs"].append(tfs[s:e].tobytes())
-        yield pa.RecordBatch.from_pydict(
+        return pa.RecordBatch.from_pydict(
             {
                 "shard": pa.array(rows["shard"], pa.int32()),
                 "bucket": pa.array(rows["bucket"], pa.int32()),
@@ -607,6 +441,12 @@ def make_tokenize_pack_kernel_arrow(
             }
         )
 
+    def kernel(batches):
+        for batch in batches:
+            packed = _pack(batch)
+            if packed is not None:
+                yield packed
+
     return kernel
 
 
@@ -614,8 +454,7 @@ def _make_unpack_encode_arrow(codec: str = "varint"):
     """applyInArrow kernel over (shard, bucket, salt) groups of PACKED
     rows: rebuild each row's term StringArray zero-copy from its
     (term_lens, term_data) buffers, concatenate the group's pairs, and
-    encode via the same :func:`_encode_term_arrays` body as the pair-row
-    path — identical output rows by construction."""
+    encode them with :func:`_encode_term_arrays`."""
     import pyarrow as pa
 
     def _encode(table):
@@ -845,8 +684,6 @@ def build_index(
     verify_sha: bool = True,
     persist_input: bool = True,
     pre_assigned: bool = False,
-    pre_tokenized: DataFrame | None = None,
-    pairs_storage: str = "none",
     postings_codec: str = "pfor",
 ) -> dict:
     """Build (or resume) the full index. Returns build metrics dict.
@@ -865,41 +702,24 @@ def build_index(
     steady-state decode is served by the contribution cache either way).
 
     Pass structure (minimal — each pass over the corpus is a real cost at
-    10^12 docs):
+    10^12 docs), the same for both analyzer modes:
       1. range shuffle for doc_id assignment (+ range-sampling scan),
-      2. ONE tokenize pass (mapInPandas, persisted): flat (doc_id, term, tf)
-         pairs + a per-doc NULL-term sentinel carrying doc_len — doc lengths
-         never need their own shuffle,
-      3. doc_meta scan: metadata + sha256 invariant column computed in the
-         same projection (no separate verification pass); doc_len joined
-         from the sentinel rows (tiny join, no content),
-      4. hot-term salt plan from a SAMPLE of the cached pairs (salting is
-         performance-only; salted==unsalted is property-tested),
-      5. the big shuffle + write: salted (shard, term_bucket, salt) encode
-         -> hot-term merge -> shard layout -> parquet, ONE job
-         (dynamic-overwriting only the resume groups still todo;
-         group=g/shard=k layout unchanged),
-      6. EXACT global term_stats (df = Σ per-shard posting counts, cf = Σ
+      2. doc_meta scan: metadata, the sha256 invariant column and doc_len
+         (the JVM token-count expression of :func:`_make_doc_len_col`)
+         computed in one projection — no separate verification pass, no
+         Python worker,
+      3. the big shuffle + write, ONE job: the pack kernel tokenizes and
+         salts in-kernel (no salt-plan pre-pass, no pairs materialized)
+         -> packed (shard, term_bucket, salt) encode -> hot-term merge ->
+         shard layout -> parquet (dynamic-overwriting only the resume
+         groups still todo; group=g/shard=k layout),
+      4. EXACT global term_stats (df = Σ per-shard posting counts, cf = Σ
          per-shard tf sums) aggregated from the WRITTEN postings with
          column pruning — a terms-level read replacing v1's full
          groupBy(term) shuffle over every pair.  Postings rows carry only
          per-shard partials (format v2): query-time idf reads the term
-         dictionary, the Lucene term-metadata/posting-data split.
-
-    ``pairs_storage`` — how the tokenized (doc_id, term, tf) relation is
-    held between pass 2 and pass 5:
-      * "none" (default, standard mode): NOT held at all — the tokenizer
-        streams straight into the salted encode shuffle (one fused stage),
-        doc_len comes from a pure-JVM expression in the doc_meta scan, and
-        the salt plan tokenizes a Bernoulli doc sample.  Byte-identical
-        output (property-tested) with no pairs-sized materialization —
-        the 100 TB shape, and measurably better multi-executor scaling
-        (the cache builders were the build's dominant page-allocator load).
-      * "disk_only": UnsafeRow-serialized executor-local spill.
-      * "memory_and_disk": Spark's columnar in-memory cache (v1 behavior;
-        pays a row-at-a-time column builder per pair).
-    Porter mode always materializes (its stopword-filtered doc_len needs
-    the Python kernel's sentinel rows).
+         dictionary, the Lucene term-metadata/posting-data split,
+      5. norms from the written doc_meta.
     """
     t0 = time.time()
     stage_sec: dict[str, float] = {}
@@ -930,93 +750,24 @@ def build_index(
     else:
         docs = assign_doc_ids(corpus, persist_output=persist_input)
     t_cur = _tick("assign_doc_ids", t_cur)
-
-    # -- ONE tokenize pass: pairs + doc_len sentinels, persisted ------------
-    # (``pre_tokenized``: the caller already produced — and persisted — the
-    # (doc_id, term, tf) + NULL-term-sentinel relation, e.g. the multifield
-    # build's single fused tokenize scan shared across field sub-indexes.)
-    own_tokenize = pre_tokenized is None
-    if own_tokenize:
-        kernel_schema = "doc_id long, term string, tf int"
-        # pairs cache level: "disk_only" serializes UnsafeRows to executor-
-        # local disk; "memory_and_disk" builds Spark's columnar in-memory
-        # cache.  The columnar path pays a row-at-a-time
-        # CompressibleColumnBuilder.appendFrom per pair (jstack-profiled:
-        # the dominant JVM cost of the tokenize stage, and the per-row
-        # allocation churn contends across executors sharing a socket —
-        # multi-executor cells measured the stage's task CPU inflating
-        # ~4x at 4 one-core executors).  DISK_ONLY streams the rows out
-        # with the cheap UnsafeRow serializer; both downstream consumers
-        # (salt-plan sample, salted encode) read it sequentially once, and
-        # at 100 TB a pairs relation would never fit a memory cache anyway.
-        fuse = pairs_storage == "none" and mode == "standard"
-        if fuse:
-            # "none": NO pairs materialization anywhere.  The tokenize
-            # kernel streams straight into the encode shuffle's map side
-            # (ONE fused stage: scan -> doc_id join -> tokenize -> salted
-            # repartition write), doc_len comes from the pure-JVM
-            # _make_doc_len_col expression inside the doc_meta scan (it
-            # matches the kernel token count exactly — property-tested),
-            # and the salt plan estimates df from a tokenized CORPUS
-            # sample instead of a pairs-cache sample.  This is the
-            # 100 TB shape: a pairs relation is ~10x the corpus and
-            # restreaming one extra tokenize of a 0.1% sample beats
-            # materializing it (measured here: the pairs cache write was
-            # the build's largest page-allocator load, and kernel-side
-            # page zeroing is what contends across co-located executors).
-            # Porter mode keeps the sentinel path: its doc_len (stopword-
-            # filtered) needs the Python kernel anyway.
-            tokenized = docs.select("doc_id", "content").mapInArrow(
-                make_tokenize_pairs_kernel_arrow(mode, emit_doc_len=False),
-                kernel_schema,
-            )
-            pairs = tokenized
-            doc_len_df = None
-        else:
-            pairs_level = (
-                StorageLevel.DISK_ONLY
-                if pairs_storage == "disk_only"
-                else StorageLevel.MEMORY_AND_DISK
-            )
-            tokenized = (
-                docs.select("doc_id", "content")
-                .mapInArrow(
-                    make_tokenize_pairs_kernel_arrow(mode, emit_doc_len=True),
-                    kernel_schema,
-                )
-                .persist(pairs_level)
-            )
-            tokenized.count()  # materialize the tokenize persist once
-            pairs = tokenized.where(F.col("term").isNotNull())
-            doc_len_df = tokenized.where(F.col("term").isNull()).select(
-                "doc_id", F.col("tf").alias("doc_len")
-            )
-    else:
-        tokenized = pre_tokenized
-        fuse = False
-        pairs = tokenized.where(F.col("term").isNotNull())
-        doc_len_df = tokenized.where(F.col("term").isNull()).select(
-            "doc_id", F.col("tf").alias("doc_len")
-        )
+    # tokenize runs inside the postings_write job (pack kernel), which
+    # books its time; the key stays so stage_seconds keeps one key set
     t_cur = _tick("tokenize", t_cur)
 
     _released = []
 
     def _release_caches() -> None:
-        """Drop the assigned-join / ranged-keys / pairs caches (idempotent)
-        — called as soon as every remaining stage reads only written
+        """Drop the assigned-join / ranged-keys caches (idempotent) —
+        called as soon as every remaining stage reads only written
         parquet.  (The raw corpus is never persisted — see the note at
         build start.)"""
         if _released:
             return
         _released.append(True)
-        if own_tokenize and not fuse:
-            tokenized.unpersist()
         if hasattr(docs, "_ctse_persisted"):
             docs._ctse_persisted.unpersist()
 
-    # -- doc_meta: metadata + sha256 invariant in one scan; doc_len joined
-    # from the cached sentinel rows (no content, no pair-level shuffle) ----
+    # -- doc_meta: metadata + sha256 invariant + doc_len in one scan ------
     meta_cols = ["doc_id", "repo", "path", "commit", "lang"] + (
         ["content_sha256"] if "content_sha256" in corpus.columns else []
     )
@@ -1029,21 +780,8 @@ def build_index(
             if has_sha
             else F.lit(True)
         ).alias("sha_ok")
-        if doc_len_df is None:
-            # fused path: doc_len is the pure-JVM token-count expression,
-            # computed inside the same content scan as the sha — no
-            # sentinel join, no second content pass
-            dm = docs.select(
-                *meta_cols,
-                sha_col,
-                F.coalesce(_make_doc_len_col(mode), F.lit(0)).alias(
-                    "doc_len"
-                ),
-            )
-        else:
-            dm = docs.select(*meta_cols, sha_col).join(
-                doc_len_df, "doc_id", "left"
-            ).withColumn("doc_len", F.coalesce("doc_len", F.lit(0)))
+        doc_len = F.coalesce(_make_doc_len_col(mode), F.lit(0))
+        dm = docs.select(*meta_cols, sha_col, doc_len.alias("doc_len"))
         dm.write.mode("overwrite").parquet(seg.path_of(index_dir, seg.DOC_META))
         # sha_ok flag on THIS row records whether the persisted sha_ok column
         # was actually computed (vs the verify_sha=False lit(True)
@@ -1151,54 +889,18 @@ def build_index(
 
     if todo or need_term_stats:
         stats_src: DataFrame | None = None  # shared written-postings scan
-        # -- hot-term salt plan (explicit + logged, SURVEY.md §4.2) from a
-        # SAMPLE of the pairs.  Salting is performance-only (salted ==
-        # unsalted byte-identically, property-tested), so estimated df is
-        # enough — this replaces round-1's full groupBy(term) pre-pass over
-        # every pair (a whole extra shuffle of the corpus-sized relation).
-        # Exact df/cf now fall out of the encode output below (B5 unchanged).
-        if fuse:
-            # packed path (round 6): salting is decided inside the pack
-            # kernel from per-batch local density (see
-            # make_tokenize_pack_kernel_arrow) — no driver pre-pass, no
-            # sample job.  The merge kernel reconciles arbitrary runs
-            # byte-identically, so per-batch disagreement is free.
-            hot_df = None
-            seg.metrics_append(
-                spark, index_dir,
-                [("salt_plan", 0, "in_kernel", 1.0)],
-            )
-        else:
-            frac = min(1.0, 1000.0 / max(hot_df_threshold, 1))
-            sampled = pairs if frac >= 1.0 else pairs.sample(
-                fraction=frac, seed=42
-            )
-            hot_rows = (
-                sampled.groupBy("term")
-                .agg((F.count("*") / F.lit(frac)).alias("df_est"))
-                .where(F.col("df_est") > hot_df_threshold)
-                .select(
-                    "term",
-                    F.least(
-                        F.lit(max_salts),
-                        F.ceil(
-                            F.col("df_est") / F.lit(hot_df_threshold)
-                        ).cast("int"),
-                    ).alias("n_salts"),
-                )
-                .collect()
-            )
-            hot_df = spark.createDataFrame(
-                [(r["term"], r["n_salts"]) for r in hot_rows] or [("", 1)],
-                "term string, n_salts int",
-            )
-            seg.metrics_append(
-                spark, index_dir,
-                [("salt_plan", 0, "hot_terms", float(len(hot_rows)))],
-            )
+        # -- hot-term salt plan (logged, SURVEY.md §4.2): decided inside
+        # the pack kernel from per-batch local density (see
+        # make_tokenize_pack_kernel_arrow) — no driver pre-pass, no sample
+        # job.  Salting is performance-only (salted == unsalted byte-
+        # identically, property-tested); exact df/cf fall out of the
+        # encode output below (B5).
+        seg.metrics_append(
+            spark, index_dir, [("salt_plan", 0, "in_kernel", 1.0)]
+        )
         t_cur = _tick("salt_plan", t_cur)
 
-        # -- THE shuffle: cached pairs -> salted (shard, term_bucket, salt)
+        # -- THE shuffle: packed pairs -> salted (shard, term_bucket, salt)
         # encode --
         # (A map-side SPIMI-style combiner — encode per-partition runs
         # BEFORE the exchange, shuffle compact runs instead of raw pairs —
@@ -1209,18 +911,6 @@ def build_index(
         # postings_write went 56s -> 105s at 1 executor.  Shuffling raw
         # pairs keeps the merge's zero-copy single-run fast path for
         # 99.9% of terms.)
-        salted = None if fuse else (
-            pairs.join(F.broadcast(hot_df), "term", "left")
-            .withColumn("n_salts", F.coalesce("n_salts", F.lit(1)))
-            .withColumn("shard", (F.col("doc_id") / shard_size).cast("int"))
-            .withColumn(
-                "salt",
-                (
-                    (F.col("doc_id") % shard_size) * F.col("n_salts") / shard_size
-                ).cast("int"),
-            )
-            .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(term_buckets)))
-        )
         enc_schema = (
             "shard int, term string, salt int, n_postings long, "
             "cf_local long, n_blocks int, postings binary"
@@ -1242,42 +932,30 @@ def build_index(
         n_encode_parts = max(
             32, 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         )
-        if fuse:
-            # PACKED encode shuffle (round 6): the tokenize kernel assigns
-            # (shard, bucket, salt) itself and emits ONE row per group per
-            # map task (flat term/doc/tf buffers) instead of one row per
-            # pair.  Same shuffled bytes, ~500x fewer rows: the per-row
-            # UnsafeRow serialize/deserialize, the reduce-side sort of
-            # every pair, and the per-pair Arrow conversion — measured as
-            # ~5/6 of the two shuffle stages' 900 task-seconds, vs ~145
-            # task-seconds of actual tokenize+encode python — collapse to
-            # per-group costs.  Output rows are byte-identical: the
-            # unpack kernel feeds the same _encode_term_arrays body.
-            packed = docs.select("doc_id", "content").mapInArrow(
-                make_tokenize_pack_kernel_arrow(
-                    mode, shard_size, term_buckets,
-                    int(num_docs), hot_df_threshold, max_salts,
-                ),
-                _PACK_SCHEMA,
+        # PACKED encode shuffle: the pack kernel assigns (shard, bucket,
+        # salt) itself and emits ONE row per group per input batch (flat
+        # term/doc/tf buffers) instead of one row per pair.  Same shuffled
+        # bytes, ~500x fewer rows: the per-row UnsafeRow serialize/
+        # deserialize, the reduce-side sort of every pair, and the per-pair
+        # Arrow conversion — measured as ~5/6 of the two shuffle stages'
+        # 900 task-seconds, vs ~145 task-seconds of actual tokenize+encode
+        # python — collapse to per-group costs.
+        packed = docs.select("doc_id", "content").mapInArrow(
+            make_tokenize_pack_kernel_arrow(
+                mode, shard_size, term_buckets,
+                int(num_docs), hot_df_threshold, max_salts,
+            ),
+            _PACK_SCHEMA,
+        )
+        encoded = (
+            packed.repartition(
+                n_encode_parts, "shard", "bucket", "salt"
             )
-            encoded = (
-                packed.repartition(
-                    n_encode_parts, "shard", "bucket", "salt"
-                )
-                .groupBy("shard", "bucket", "salt")
-                .applyInArrow(
-                    _make_unpack_encode_arrow(postings_codec), enc_schema
-                )
+            .groupBy("shard", "bucket", "salt")
+            .applyInArrow(
+                _make_unpack_encode_arrow(postings_codec), enc_schema
             )
-        else:
-            encoded = (
-                salted.repartition(n_encode_parts, "shard", "bucket", "salt")
-                .groupBy("shard", "bucket", "salt")
-                .applyInArrow(
-                    _make_encode_bucket_group_arrow(postings_codec),
-                    enc_schema,
-                )
-            )
+        )
 
         merge_schema = (
             "shard int, term string, n_postings long, cf_local long, "
@@ -1359,8 +1037,8 @@ def build_index(
         t_cur = _tick("postings_write", t_cur)
 
         # -- release the build caches NOW: everything below reads only the
-        # WRITTEN parquet (postings, doc_meta), and the corpus + ranged +
-        # 48M-row pairs caches otherwise sit on the executor heaps through
+        # WRITTEN parquet (postings, doc_meta), and the assigned-join +
+        # ranged-keys caches otherwise sit on the executor heaps through
         # the tail stages — measured as GC-dominated (12.8s GC on a 16.4s
         # stage) on 14g executors at 200k docs.
         _release_caches()

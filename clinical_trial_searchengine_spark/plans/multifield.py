@@ -15,10 +15,12 @@ the deterministic global rank of the shared (repo, path, commit) key set
 (property: tests/test_build_invariants.py::test_doc_id_assignment_
 deterministic); build verifies num_docs agreement across fields.
 
-At 100 TB this is the layout you want: field sub-indexes build from the SAME
-corpus scan pass fan-out (one tokenize per field is inherent to per-field
-stats), shard/salt/resume machinery is reused unchanged, and dis_max is a
-full-outer join on doc_id of k' pre-ranked legs — no new shuffle shapes.
+At 100 TB this is the layout you want: the corpus is range-shuffled for
+doc_ids once, and each field sub-index runs the single-field build path over
+that one assigned relation with its field's text as ``content`` — one
+tokenize per field, which per-field stats need anyway.  Shard/salt/resume
+machinery is reused unchanged, and dis_max is a full-outer join on doc_id of
+k' pre-ranked legs — no new shuffle shapes.
 """
 
 from __future__ import annotations
@@ -29,67 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clinical_trial_searchengine_spark.plans import segments as seg
-from clinical_trial_searchengine_spark.plans.build import build_index
+from clinical_trial_searchengine_spark.plans.build import (
+    assign_doc_ids,
+    build_index,
+)
 from clinical_trial_searchengine_spark.plans.query import IndexHandle, search_all
 
 MF_META = "multifield_meta.json"
-
-
-def _make_fused_tokenize_kernel(mode: str, n_fields: int):
-    """ONE corpus scan -> every field's flat (field, doc_id, term, tf) rows
-    plus per-(field, doc) NULL-term doc_len sentinels — the per-field
-    tokenize passes fused into a single mapInArrow (each field still gets
-    its OWN tf/doc_len, required for Lucene per-field stats).  Same
-    allocation-free Arrow analyzer as the single-field build path."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from clinical_trial_searchengine_spark.functions.analysis import (
-        analyze_flat_arrow,
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            names = batch.schema.names
-            doc_ids = (
-                batch.column(names.index("doc_id"))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            fields, docs, terms, tfs_out = [], [], [], []
-            for i in range(n_fields):
-                row_idx, dict_idx, dic, tfs, lens = analyze_flat_arrow(
-                    batch.column(names.index(f"__field_{i}")), mode
-                )
-                fields.append(
-                    pa.array(np.full(len(row_idx), i, np.int32), pa.int32())
-                )
-                docs.append(pa.array(doc_ids[row_idx], type=pa.int64()))
-                terms.append(
-                    pc.take(dic, pa.array(dict_idx, type=pa.int64()))
-                )
-                tfs_out.append(pa.array(tfs.astype(np.int32), pa.int32()))
-                # doc_len sentinels for this field
-                fields.append(
-                    pa.array(np.full(len(doc_ids), i, np.int32), pa.int32())
-                )
-                docs.append(pa.array(doc_ids, type=pa.int64()))
-                terms.append(pa.nulls(len(doc_ids), type=pa.string()))
-                tfs_out.append(
-                    pa.array(lens.astype(np.int32), type=pa.int32())
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.concat_arrays(fields),
-                    pa.concat_arrays(docs),
-                    pa.concat_arrays(terms),
-                    pa.concat_arrays(tfs_out),
-                ],
-                names=["field", "doc_id", "term", "tf"],
-            )
-
-    return kernel
 
 
 def field_dir(index_dir: str, name: str) -> str:
@@ -131,30 +79,10 @@ def build_multifield_index(
     # ONE range shuffle of the corpus, shared by every field sub-index
     # (assignment is key-deterministic, so this is an optimization, not a
     # correctness requirement — property-tested in test_build_invariants).
-    from pyspark.storagelevel import StorageLevel
-
-    from clinical_trial_searchengine_spark.plans.build import assign_doc_ids
-
+    # The assigned relation is persisted once; each sub-build reads it with
+    # its field expression as ``content`` and runs the one build path.
     assigned = assign_doc_ids(corpus, persist_output=True)
-    # ONE fused tokenize scan of the corpus emitting every field's pairs +
-    # doc_len sentinels, persisted once and shared by all sub-builds (each
-    # sub-build's own tokenize stage is skipped via pre_tokenized) — a
-    # K-field index costs ONE content scan, not K.
-    mode = build_kwargs.get("mode", "standard")
-    field_items = list(fields.items())
-    projected = assigned.select(
-        "doc_id",
-        *[
-            F.expr(expr).alias(f"__field_{i}")
-            for i, (_, expr) in enumerate(field_items)
-        ],
-    )
-    all_tokens = projected.mapInArrow(
-        _make_fused_tokenize_kernel(mode, len(field_items)),
-        "field int, doc_id long, term string, tf int",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    all_tokens.count()  # materialize the single tokenize pass
-    for i, (name, expr) in enumerate(field_items):
+    for name, expr in fields.items():
         sub = assigned.withColumn("content", F.expr(expr))
         if "content_sha256" in sub.columns and name not in identity_fields:
             # derived field text != source content: the sha invariant does
@@ -163,10 +91,8 @@ def build_multifield_index(
         metas[name] = build_index(
             spark, sub, field_dir(index_dir, name),
             pre_assigned=True,
-            pre_tokenized=all_tokens.where(F.col("field") == i).drop("field"),
             **build_kwargs,
         )
-    all_tokens.unpersist()
     assigned._ctse_persisted.unpersist()
     n0 = metas[first_field]["num_docs"]
     for name, m in metas.items():

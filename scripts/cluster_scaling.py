@@ -290,10 +290,8 @@ def run_cell(n_execs: int, n_docs: int) -> dict | None:
         "--index-dir", index_dir,
         "--shard-size", "50000",
         "--hot-df-threshold", str(max(1000, n_docs // 10)),
-        # cluster shape: no input cache (re-scan beats caching content) and
-        # the fused zero-materialization tokenize->encode pipeline
+        # cluster shape: no input cache (re-scan beats caching content)
         "--no-persist-input",
-        "--pairs-storage", "none",
     ])
     t0 = time.time()
     out = subprocess.run(cmd, capture_output=True, text=True,

@@ -42,12 +42,6 @@ def main() -> None:
     ap.add_argument("--no-persist-input", action="store_true",
                     help="skip caching the input (recommended on clusters "
                     "reading Iceberg — let the scans re-read)")
-    ap.add_argument("--pairs-storage", default="none",
-                    choices=["memory_and_disk", "disk_only", "none"],
-                    help="tokenized-pairs materialization: disk_only skips "
-                    "the row-at-a-time columnar cache builder; none fuses "
-                    "tokenize straight into the encode shuffle (standard "
-                    "analyzer only — recommended at cluster scale)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -77,7 +71,6 @@ def main() -> None:
         n_resume_groups=args.resume_groups,
         verify_sha=not args.no_verify_sha,
         persist_input=not args.no_persist_input,
-        pairs_storage=args.pairs_storage,
     )
     print(json.dumps(meta))
 

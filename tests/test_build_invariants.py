@@ -50,67 +50,108 @@ def test_doc_id_assignment_deterministic(spark, small_corpus_df):
     assert keys_by_id == sorted(keys_by_id)  # rank order == key order
 
 
-def test_salting_equivalence(spark, small_corpus_df, tmp_path):
-    """Salted build == unsalted build: identical postings bytes per
-    (shard, term) (FIXTURES.md §6)."""
-    d1, d2 = str(tmp_path / "salted"), str(tmp_path / "unsalted")
-    SearchEngine(spark, d1).build(
-        small_corpus_df, shard_size=64, hot_df_threshold=10, max_salts=8
-    )
-    SearchEngine(spark, d2).build(
-        small_corpus_df, shard_size=64, hot_df_threshold=10**9
-    )
-    cols = ["shard", "term", "n_blocks", "postings"]
-    p1 = {
-        (r["shard"], r["term"]): (r["n_blocks"], bytes(r["postings"]))
-        for r in spark.read.parquet(seg.path_of(d1, seg.POSTINGS)).select(cols).collect()
-    }
-    p2 = {
-        (r["shard"], r["term"]): (r["n_blocks"], bytes(r["postings"]))
-        for r in spark.read.parquet(seg.path_of(d2, seg.POSTINGS)).select(cols).collect()
-    }
-    assert p1 == p2
-    # exact global term stats identical regardless of salting
-    ts1 = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(seg.path_of(d1, seg.TERM_STATS)).collect()
-    }
-    ts2 = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(seg.path_of(d2, seg.TERM_STATS)).collect()
-    }
-    assert ts1 == ts2
-    # salting actually happened: the fused packed path decides salts
-    # INSIDE the pack kernel from local density (round 6) — assert the
-    # pipeline marker, then drive the kernel directly and check it
-    # assigns salt > 0 groups for this corpus/threshold
-    metrics = spark.read.parquet(seg.path_of(d1, seg.METRICS))
-    assert metrics.where(F.col("metric") == "in_kernel").count() >= 1
+def _corpus_batch(df):
     import pyarrow as pa
 
-    from clinical_trial_searchengine_spark.plans.build import (
-        make_tokenize_pack_kernel_arrow,
-    )
-
-    pdf = small_corpus_df.select("content").toPandas()
-    batch = pa.RecordBatch.from_pydict(
+    pdf = df.select("content").toPandas()
+    return pa.RecordBatch.from_pydict(
         {
             "doc_id": pa.array(range(len(pdf)), pa.int64()),
             "content": pa.array(pdf["content"].tolist(), pa.string()),
         }
     )
-    kern = make_tokenize_pack_kernel_arrow(
-        "standard", 64, 8, len(pdf), 10, 8
+
+
+def test_salting_equivalence(spark, small_corpus_df, tmp_path):
+    """Salted build == unsalted build: identical postings bytes per
+    (shard, term) in both analyzer modes (FIXTURES.md §6)."""
+    from clinical_trial_searchengine_spark.plans.build import (
+        make_tokenize_pack_kernel_arrow,
     )
-    out = list(kern(iter([batch])))
-    salts = [
-        s
-        for b in out
-        for s in b.column(b.schema.names.index("salt")).to_pylist()
-    ]
-    assert salts and max(salts) > 0
-    shutil.rmtree(d1)
-    shutil.rmtree(d2)
+
+    def postings(d):
+        cols = ["shard", "term", "n_blocks", "postings"]
+        return {
+            (r["shard"], r["term"]): (r["n_blocks"], bytes(r["postings"]))
+            for r in spark.read.parquet(seg.path_of(d, seg.POSTINGS))
+            .select(cols).collect()
+        }
+
+    def term_stats(d):
+        return {
+            r["term"]: (r["df"], r["cf"])
+            for r in spark.read.parquet(seg.path_of(d, seg.TERM_STATS))
+            .collect()
+        }
+
+    batch = _corpus_batch(small_corpus_df)
+    for mode in ("standard", "porter"):
+        d1 = str(tmp_path / f"salted_{mode}")
+        d2 = str(tmp_path / f"unsalted_{mode}")
+        SearchEngine(spark, d1).build(
+            small_corpus_df, mode=mode, shard_size=64, hot_df_threshold=10,
+            max_salts=8,
+        )
+        SearchEngine(spark, d2).build(
+            small_corpus_df, mode=mode, shard_size=64, hot_df_threshold=10**9
+        )
+        assert postings(d1) == postings(d2), mode
+        # exact global term stats identical regardless of salting
+        assert term_stats(d1) == term_stats(d2), mode
+        # salting actually happened: salts are decided INSIDE the pack
+        # kernel from local density — assert the pipeline marker, then
+        # drive the kernel directly and check it assigns salt > 0 groups
+        # for this corpus/threshold
+        metrics = spark.read.parquet(seg.path_of(d1, seg.METRICS))
+        assert metrics.where(F.col("metric") == "in_kernel").count() >= 1
+        kern = make_tokenize_pack_kernel_arrow(
+            mode, 64, 8, batch.num_rows, 10, 8
+        )
+        salts = [
+            s for b in kern(iter([batch])) for s in b.column("salt").to_pylist()
+        ]
+        assert salts and max(salts) > 0, mode
+        shutil.rmtree(d1)
+        shutil.rmtree(d2)
+
+
+def test_pack_kernel_streams_per_batch(small_corpus_df):
+    """The pack kernel yields each input batch's packed rows before it
+    pulls the next batch, so worker memory is bounded by the batch."""
+    from clinical_trial_searchengine_spark.plans.build import (
+        make_tokenize_pack_kernel_arrow,
+    )
+
+    batch = _corpus_batch(small_corpus_df)
+    half = batch.num_rows // 2
+    got = []
+
+    def batches():
+        yield batch.slice(0, half)
+        assert got, "batch 2 pulled before batch 1's output was yielded"
+        yield batch.slice(half)
+
+    kern = make_tokenize_pack_kernel_arrow(
+        "standard", 64, 8, batch.num_rows, 10, 8
+    )
+    for out in kern(batches()):
+        got.append(out)
+    assert len(got) == 2
+
+
+def test_string_array_parts_rejects_non_utf8():
+    """Offsets are read as int32: a large_string array must raise, not be
+    silently misparsed."""
+    import pyarrow as pa
+
+    from clinical_trial_searchengine_spark.plans.build import (
+        _string_array_parts,
+    )
+
+    data, starts, lens = _string_array_parts(pa.array(["ab", "", "c"]))
+    assert list(starts) == [0, 2, 2] and list(lens) == [2, 0, 1]
+    with pytest.raises(TypeError):
+        _string_array_parts(pa.array(["ab", "c"], pa.large_string()))
 
 
 def test_segment_schemas(built_index, spark):
@@ -265,64 +306,97 @@ def test_sha_failure_then_fixed_corpus_resumes_clean(
     assert dm.where(~F.col("sha_ok")).count() == 0
 
 
-def test_fused_build_identical_to_classic(spark, small_corpus_df, tmp_path):
-    """pairs_storage='none' (tokenize fused straight into the encode
-    shuffle, doc_len from the JVM expression, salt plan from a doc sample)
-    must produce byte-identical index artifacts to the classic
-    materialized-pairs build — postings payloads included."""
-    from clinical_trial_searchengine_spark.engine import SearchEngine
+GOLDEN_BUILD_KWARGS = dict(
+    shard_size=48, hot_df_threshold=40, max_salts=4, n_resume_groups=2,
+    norm_chunk=16,
+)
 
-    outs = {}
-    for name, ps in [("classic", "memory_and_disk"), ("fused", "none")]:
-        d = str(tmp_path / name)
+_DIGEST_KEYS = [
+    (seg.DOC_META, ["doc_id"]),
+    (seg.TERM_STATS, ["term"]),
+    (seg.NORMS, ["shard", "chunk"]),
+    (seg.POSTINGS, ["group", "shard", "term"]),
+]
+
+
+def _segment_digests(spark, index_dir):
+    """sha256 per segment over every row (sorted by key), every column
+    (sorted by name) — binary cells (postings, doc_lens) as hex bytes."""
+    import hashlib
+    import json
+
+    out = {}
+    for sub, key in _DIGEST_KEYS:
+        df = spark.read.parquet(seg.path_of(index_dir, sub))
+        cols = sorted(df.columns)
+        rows = sorted(
+            (tuple(r[k] for k in key), [
+                v.hex() if isinstance(v, (bytes, bytearray)) else v
+                for v in (r[c] for c in cols)
+            ])
+            for r in df.collect()
+        )
+        h = hashlib.sha256(json.dumps(cols).encode())
+        for _, vals in rows:
+            h.update(json.dumps(vals).encode() + b"\n")
+        out[sub] = h.hexdigest()
+    return out
+
+
+# Captured from the pair-row (porter) and packed (standard) build paths
+# before the pair-row path was removed: the identity reference for both
+# modes of the single build path.
+GOLDEN_DIGESTS = {
+    "standard": {
+        seg.DOC_META: "85a2e661d79dccef30368c360653a603"
+                      "3121329bbb24e12795087a1148c0e51b",
+        seg.TERM_STATS: "ee9f501c3fbcd609c84fdfa518824060"
+                        "f1efb0e1b1d6111775bf38c99ffee5a6",
+        seg.NORMS: "52130ac58feb436f4032234dbec78e02"
+                   "02241d730140dfedde3542aef2a99d39",
+        seg.POSTINGS: "dbca9977f826d1347bd7131959c4c95a"
+                      "12d643e48dcb75323f99e3ac87f62baa",
+    },
+    "porter": {
+        seg.DOC_META: "880c5d8e00abfd4eb46a4d4c9151872b"
+                      "17929e413f5152f2cd14e911a46276fc",
+        seg.TERM_STATS: "fd61a63898fbe999630dd3a0ae732bf9"
+                        "6879c318ffd49c79ae4818c56c91b933",
+        seg.NORMS: "b003a66b8cbaabb916ec4cb9744fe79f"
+                   "6107793c129eebd080533d134653cf3a",
+        seg.POSTINGS: "3a44e762eaa48ec9b98172a3cfd5f2bb"
+                      "7314ebd6ee4f52bb8ec3da0996be2f2f",
+    },
+}
+
+
+def test_build_matches_golden_digests(spark, small_corpus_df, tmp_path):
+    """The salted 200-doc build writes byte-identical DOC_META, TERM_STATS,
+    NORMS and POSTINGS (postings payloads included) in both analyzer
+    modes."""
+    for mode, want in GOLDEN_DIGESTS.items():
+        d = str(tmp_path / mode)
         SearchEngine(spark, d).build(
-            small_corpus_df,
-            shard_size=48,
-            hot_df_threshold=40,
-            max_salts=4,
-            n_resume_groups=2,
-            norm_chunk=16,
-            pairs_storage=ps,
+            small_corpus_df, mode=mode, **GOLDEN_BUILD_KWARGS
         )
-        outs[name] = d
-
-    for sub, sort in [
-        (seg.DOC_META, ["doc_id"]),
-        (seg.TERM_STATS, ["term"]),
-        (seg.NORMS, ["shard", "chunk"]),
-        (seg.POSTINGS, ["group", "shard", "term"]),
-    ]:
-        a = (
-            spark.read.parquet(seg.path_of(outs["classic"], sub))
-            .toPandas().sort_values(sort).reset_index(drop=True)
-        )
-        b = (
-            spark.read.parquet(seg.path_of(outs["fused"], sub))
-            .toPandas().sort_values(sort).reset_index(drop=True)
-        )
-        assert len(a) == len(b), sub
-        a, b = a[sorted(a.columns)], b[sorted(b.columns)]
-        assert list(a.columns) == list(b.columns), sub
-        for col in a.columns:
-            if a[col].dtype == object:
-                assert all(
-                    x == y for x, y in zip(a[col], b[col])
-                ), f"{sub}.{col}"
-            else:
-                assert a[col].equals(b[col]), f"{sub}.{col}"
+        assert _segment_digests(spark, d) == want, mode
+        shutil.rmtree(d)
 
 
 def test_doc_len_ignores_literal_control_chars(spark):
-    """The fused standard-mode doc_len expression must equal the
-    tokenizer's count even when content contains a literal \\x01 (the
-    marker char) — it is a separator to the analyzer, not a token."""
+    """The JVM doc_len expression must equal the analyzer's token count in
+    both modes: a literal \\x01 is a separator, not a token; porter drops
+    whole-token stopwords only; and the non-ASCII code points whose
+    lowercase holds a token char (U+0130, the Kelvin sign) count as the
+    analyzer counts them."""
+    import pandas as pd
+
     from clinical_trial_searchengine_spark.functions.analysis import (
         analyze_batch,
     )
     from clinical_trial_searchengine_spark.plans.build import (
         _make_doc_len_col,
     )
-    import pandas as pd
 
     texts = [
         "foo\x01bar",              # marker inside: 2 tokens, not 3
@@ -330,11 +404,19 @@ def test_doc_len_ignores_literal_control_chars(spark):
         "plain text here",         # control
         "a\x01b c\x01\x01d",       # interleaved
         "",
+        "\u0130x foo",             # lowers to "i" + U+0307: i, x, foo
+        "a\u0130n",                # ai, n
+        "x\u212ay",                # Kelvin sign lowers to k: xky
+        "foo_the bar",             # stopword between separators
+        "a1 an2 is",               # stopword prefixes of longer tokens
+        "The cat and THE dog",     # stopwords in any case
+        "the\u0130 \u0130is \u212athe",  # thei, i, is, kthe
     ]
-    _, expected = analyze_batch(pd.Series(texts), "standard")
     df = spark.createDataFrame([(t,) for t in texts], "content string")
-    got = [r[0] for r in df.select(_make_doc_len_col("standard")).collect()]
-    assert got == list(expected)
+    for mode in ("standard", "porter"):
+        _, expected = analyze_batch(pd.Series(texts), mode)
+        got = [r[0] for r in df.select(_make_doc_len_col(mode)).collect()]
+        assert got == list(expected), mode
 
 
 def test_assign_doc_ids_null_keys_and_duplicate_guard(spark):

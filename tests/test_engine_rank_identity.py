@@ -359,31 +359,6 @@ def test_search_many_per_query_filters_and_boosts(
         monkeypatch.undo()
 
 
-def test_multifield_build_tokenizes_once(
-    spark, small_corpus_df, tmp_path_factory, monkeypatch
-):
-    """The fused multifield build runs ONE tokenize scan for all fields:
-    no sub-build may fall back to its own make_tokenize_pairs_kernel pass."""
-    from clinical_trial_searchengine_spark.plans import build as build_mod
-    from clinical_trial_searchengine_spark.plans.multifield import (
-        build_multifield_index,
-    )
-
-    def _forbidden(*a, **k):
-        raise AssertionError(
-            "per-field tokenize pass ran despite fused pre_tokenized input"
-        )
-
-    monkeypatch.setattr(build_mod, "make_tokenize_pairs_kernel", _forbidden)
-    d = str(tmp_path_factory.mktemp("mf_fused") / "idx")
-    out = build_multifield_index(
-        spark, small_corpus_df, d,
-        fields={"head": "substring(content, 1, 80)", "body": "content"},
-        shard_size=48,
-    )
-    assert out["num_docs"] > 0
-
-
 def test_search_many_fallback_is_one_job_not_a_search_loop(
     built_index, spark, monkeypatch
 ):
