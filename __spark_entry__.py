@@ -148,9 +148,9 @@ def _engine_topk_as_orig_ids(spark, sf_dir, scored, k=10, index_dir=None):
 
 def _q_engine_bm25_wand(spark, sf_dir):
     """B6: block-max dynamic pruning against the SAME DuckDB BM25 oracle.
-    Exercises BOTH the production vectorized block-max kernel ('pruned',
-    what the public use_wand/'wand' surface now resolves to) and the
-    demoted doc-at-a-time Python reference ('wand_ref', test-only oracle)
+    Exercises BOTH the production vectorized block-max kernel ('pruned')
+    and the demoted doc-at-a-time Python reference ('wand_ref', test-only
+    oracle)
     — driver-verified pruned == wand_ref == SQL oracle.  Over-fetch k=50
     so a raw-score tie at the engine's cut cannot flip the oracle-ordered
     top-10."""

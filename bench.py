@@ -153,9 +153,8 @@ def main() -> None:
     # (rare-term queries, where skip bookkeeping is pure overhead) — this
     # cell is the standing evidence auto <= min(pruned, exhaustive) on a
     # mixed batch.  wand_ref is the DEMOTED doc-at-a-time Python reference
-    # (test-only oracle, not reachable as a production kernel — the public
-    # 'wand'/use_wand surface resolves to 'pruned'); measured here for the
-    # record.  Six-query batches, one warm pass per kernel first.
+    # (test-only oracle, never chosen by the default path); measured here
+    # for the record.  Six-query batches, one warm pass per kernel first.
     kq = list(reference_queries())[:6]
     for kern in ("auto", "pruned", "exhaustive", "wand_ref"):
         arg = None if kern == "auto" else kern

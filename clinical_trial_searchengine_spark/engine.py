@@ -137,9 +137,10 @@ class SearchEngine:
     def search_many_rows(
         self, query_texts: dict[str, str], k: int = 10, **kwargs
     ) -> dict[str, list[tuple[int, float]]]:
-        """Serving twin of :meth:`search_many`: same one-job batch kernel,
-        global top-k merged on the driver over the bounded per-shard
-        candidates (coordinating-node shape) — no Window exchange."""
+        """Serving twin of :meth:`search_many`: same one-job query-set
+        kernel, global top-k merged on the driver over the bounded
+        per-shard candidates (coordinating-node shape) — no Window
+        exchange."""
         return search_many_rows(
             self.spark, self.index_dir, query_texts, k,
             handle=self.handle(), **kwargs,

@@ -1,18 +1,29 @@
 """Query-time BM25 top-k over the doc-sharded segment layout.
 
-Lifecycle (SURVEY.md §3.1 steps 4-9, Spark-first):
+Lifecycle (SURVEY.md §3.1 steps 4-9, Spark-first).  Every entry point —
+:func:`search`, :func:`search_all`, :func:`search_many`,
+:func:`search_many_rows` — scores through ONE function, :func:`_candidates`,
+over a query SET ({query_id: qtf}; a single query is a set of one):
 
   analyze query text with the SAME kernel as indexing (driver-side, tiny)
-  -> broadcast query terms + exact global stats (N, avgdl, per-term df)
-  -> parquet scan of postings pruned to the query terms (predicate pushdown;
-     files are sorted by term so row-group min/max skips almost everything)
-  -> cogroup(postings, norms) by shard -> per-shard scoring kernel:
-     decode -> BM25 (k1=1.2, b=0.75) -> bounded top-k heap per shard
-     (df-adaptive default: vectorized block-max 'pruned' vs 'exhaustive';
-     the doc-at-a-time Python WAND is a demoted test-only oracle
-     'wand_ref' — equivalence property-tested)
-  -> global top-k merge: orderBy(score desc, doc_id asc).limit(k)
-     (Catalyst TakeOrderedAndProject = per-partition heap + driver merge).
+  -> exact global stats: N and avgdl from meta, per-term df from the term
+     dictionary (:meth:`IndexHandle.global_dfs`)
+  -> filter/boost tables collected once into kernel-pushable arrays
+     (:func:`_prepare_pushdowns`); oversized or join-defined tables take
+     the exact score-everything + join fallback
+  -> kernel choice (:func:`_choose_kernel`): the exhaustive set kernel for
+     every set, or — for a set of one query without boost — vectorized
+     block-max 'pruned' once the candidate pool dwarfs k (the doc-at-a-time
+     Python WAND 'wand_ref' is a test-only oracle; all rank-identical)
+  -> postings scan pruned to the set's terms (parquet predicate pushdown on
+     term-sorted files, or the warmed cache) -> per-(gen, shard) kernel in
+     one of three norms shapes (:func:`_apply_kernel`): broadcast norms
+     (warmed, below the preload cap), warmed cogroup, cold cogroup
+  -> per-shard bounded top-k per query: (query_id, doc_id, score) rows
+  -> front-end merge: ``orderBy(score desc, doc_id asc).limit(k)``
+     (Catalyst TakeOrderedAndProject) for :func:`search`, a per-query
+     Window rank for :func:`search_many`, a driver merge for
+     :func:`search_many_rows`.
 
 Score reproducibility: per-doc contributions are accumulated in term-sorted
 order in float64, matching tests/oracle.py bit-for-bit (SURVEY.md §7(a)).
@@ -27,9 +38,12 @@ reference: backend/search/mapping.json):
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 import math
-from collections import Counter
+import threading
+from collections import Counter, OrderedDict
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -46,6 +60,8 @@ from clinical_trial_searchengine_spark.functions.codec import (
 from clinical_trial_searchengine_spark.plans import segments as seg
 
 _RESULT_SCHEMA = "doc_id long, score double"
+# what every scoring kernel emits and _candidates returns
+_CANDIDATE_SCHEMA = "query_id string, doc_id long, score double"
 
 
 def _idf(N: int, df: int) -> float:
@@ -61,10 +77,6 @@ def _norms_dl(norms_pdf: pd.DataFrame) -> np.ndarray:
 
 def _topk_from_scores(acc, base, k):
     nz = np.flatnonzero(acc)
-    if nz.size == 0:
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
     scores = acc[nz]
     if nz.size > k:
         sel = np.argpartition(-scores, k - 1)[:k]
@@ -79,15 +91,17 @@ def _topk_from_scores(acc, base, k):
 
 
 def _empty_result() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-
-
-def _empty_batch_result() -> pd.DataFrame:
     return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
         {"query_id": "str", "doc_id": "int64", "score": "float64"}
     )
+
+
+def _tagged(top: pd.DataFrame, qid: str) -> pd.DataFrame:
+    """Per-shard top-k of one query as kernel output rows."""
+    if top.empty:
+        return _empty_result()
+    top.insert(0, "query_id", qid)
+    return top
 
 
 # one row per (gen, shard, term) the pruned kernel touched — the evidence
@@ -97,10 +111,7 @@ _PROFILE_SCHEMA = (
     "n_blocks long, blocks_decoded long, decode_mode string, "
     "alive_docs long, theta double"
 )
-_PROFILE_COLS = [
-    "gen", "shard", "term", "weight", "df", "n_blocks", "blocks_decoded",
-    "decode_mode", "alive_docs", "theta",
-]
+_PROFILE_COLS = [c.split()[0] for c in _PROFILE_SCHEMA.split(", ")]
 
 
 def _profile_pdf(stats: list[tuple]) -> pd.DataFrame:
@@ -127,6 +138,21 @@ def _tomb_local(tombs: np.ndarray, gbase: int, nd: int) -> np.ndarray:
     return (tombs[lo:hi] - gbase).astype(np.int64)
 
 
+def _dead_mask(tombs: np.ndarray, allow, gbase: int, nd: int):
+    """Bool mask of a shard's docs that must not be returned: tombstoned,
+    or outside the pushed filter allow-mask (B4 — the tombstone mechanism
+    inverted).  None when nothing is masked."""
+    dead = None
+    if allow is not None:
+        dead = np.ones(nd, dtype=bool)
+        dead[_tomb_local(allow, gbase, nd)] = False
+    if tombs.size:
+        if dead is None:
+            dead = np.zeros(nd, dtype=bool)
+        dead[_tomb_local(tombs, gbase, nd)] = True
+    return dead
+
+
 # ---------------------------------------------------------------------------
 # Cross-query contribution cache (per Python-worker process).
 #
@@ -149,8 +175,6 @@ _CONTRIB_CACHE_CAP = 256 * 1024 * 1024
 
 
 def _dl_token(dl: np.ndarray) -> bytes:
-    import hashlib
-
     return hashlib.md5(dl.tobytes()).digest()
 
 
@@ -158,8 +182,6 @@ def _contrib_cached(buf: bytes, base: int, dl, avgdl, k1, b, dl_tok):
     """(local offsets, tf/(tf+Kd)) for one posting list — decoded once per
     worker process, reused across queries."""
     global _CONTRIB_CACHE_BYTES
-    import hashlib
-
     key = (hashlib.md5(buf).digest(), dl_tok, base, avgdl, k1, b)
     ent = _CONTRIB_CACHE.get(key)
     if ent is None:
@@ -176,79 +198,80 @@ def _contrib_cached(buf: bytes, base: int, dl, avgdl, k1, b, dl_tok):
     return ent
 
 
-def _postings_by_term(p_pdf: pd.DataFrame, need_df: bool) -> dict:
-    """{term: (postings_bytes, df_or_None)} via .values arrays —
-    pd.itertuples has a ~1.4 ms fixed cost per call (profiled), paid once
-    per (gen, shard) group at query time."""
-    terms = p_pdf["term"].values
-    posts = p_pdf["postings"].values
-    if need_df:
-        dfs_col = p_pdf["df"].values
-        return {t: (p, int(d)) for t, p, d in zip(terms, posts, dfs_col)}
-    return {t: (p, None) for t, p in zip(terms, posts)}
+def _postings_by_term(p_pdf: pd.DataFrame) -> dict:
+    """{term: postings_bytes} via .values arrays — pd.itertuples has a
+    ~1.4 ms fixed cost per call (profiled), paid once per (gen, shard)
+    group at query time."""
+    return dict(zip(p_pdf["term"].values, p_pdf["postings"].values))
 
 
-def _make_exhaustive_kernel(qtf, N, avgdl, k1, b, shard_size, k,
-                            bases=None, dfs=None, tombs=None, allow=None,
-                            boost=None):
-    """Vectorized per-(gen, shard) kernel: decode-all, accumulate, bounded
-    top-k.  Takes ``(key, p_pdf, dl)`` with ``dl`` the shard's doc-length
-    float64 array — supplied either from the cogrouped norms relation or
-    from the warmed driver-side norms broadcast (see :func:`_apply_kernel`).
+def _make_exhaustive_kernel(queries, N, avgdl, k1, b, shard_size, k,
+                            bases, dfs, tombs, allows=None, boosts=None):
+    """Vectorized per-(gen, shard) kernel over a query SET: decode each
+    needed posting list once per shard, accumulate one float64 score
+    vector per query, bounded top-k per query.  Called as ``(key, p_pdf,
+    dl)`` with ``dl`` the shard's doc lengths (:func:`_apply_kernel`).
+    O(total postings) numpy work, no per-posting Python; a set of many
+    queries is the eval-pipeline shape (reference runs 75 TREC topics per
+    run, reference: backend/evaluation/evaluation_pipeline.py:122-150).
 
-    O(total postings) numpy work; no per-posting Python.  This is the default
-    because vectorized exhaustive scoring beats pointer-chasing WAND in
-    Python for all but extremely selective queries.
-
-    ``bases``: {gen: global doc_id offset} for delta-generation indexes
-    (gen-local ids are globalized as base + local).  ``dfs``: {term: GLOBAL
-    df} — required for multi-generation indexes where the per-generation
-    postings row df is stale; None -> use the row's df (single-gen exact).
-    ``boost``: optional (sorted global doc_ids int64, multipliers float64)
-    pair — pushed function-score (B3): multipliers are applied to the full
-    accumulated scores BEFORE the per-shard heap, so the heap holds the
-    top-k of the BOOSTED order directly (exact: every match's boosted score
-    is materialized here, exhaustively — no pruning bound has to account
-    for the multiplier).
+    ``queries``: {query_id: {term: qtf}}.  ``bases``: {gen: global doc_id
+    offset}.  ``dfs``: {term: GLOBAL df}.  ``tombs``: sorted GLOBAL
+    doc_ids never returned.  ``allows``: {query_id: sorted allow-mask}
+    (pushed filter context, B4).  ``boosts``: {query_id: (sorted global
+    doc_ids, multipliers)} (pushed function-score, B3), applied to the
+    full accumulated scores BEFORE the per-shard heap — exact, since every
+    match's boosted score is materialized and no pruning bound has to
+    account for the multiplier.
     """
-    terms_sorted = sorted(qtf)
-    bases = bases or {0: 0}
+    all_terms = sorted({t for q in queries.values() for t in q})
+    idf = {t: _idf(N, dfs[t]) for t in all_terms}
+    terms_sorted = {qid: sorted(qtf) for qid, qtf in queries.items()}
+    allows = allows or {}
+    boosts = boosts or {}
 
     def kernel(key, p_pdf: pd.DataFrame, dl: np.ndarray) -> pd.DataFrame:
         gen, shard = int(key[0]), int(key[1])
         base = shard * shard_size  # gen-LOCAL shard base (norms/postings ids)
+        gbase = base + bases[gen]
+        by_term = _postings_by_term(p_pdf)
+        # decode + per-term normalized contribution, shared across the
+        # set's queries (and across calls via the worker contribution cache)
         dl_tok = _dl_token(dl)
-        acc = np.zeros(dl.size, dtype=np.float64)
-        by_term = _postings_by_term(p_pdf, need_df=dfs is None)
-        for term in terms_sorted:  # fixed summation order == oracle
-            row = by_term.get(term)
-            if row is None:
-                continue
-            df = dfs[term] if dfs is not None else row[1]
-            off, norm = _contrib_cached(
-                bytes(row[0]), base, dl, avgdl, k1, b, dl_tok
-            )
-            acc[off] += (qtf[term] * _idf(N, df)) * norm
-        if tombs is not None and tombs.size:
-            acc[_tomb_local(tombs, base + bases[gen], dl.size)] = 0.0
-        if allow is not None:
-            keep = np.zeros(dl.size, dtype=bool)
-            keep[_tomb_local(allow, base + bases[gen], dl.size)] = True
-            acc[~keep] = 0.0
-        if boost is not None:
-            bids, bvals = boost
-            gb = base + bases[gen]
-            lo = int(np.searchsorted(bids, gb))
-            hi = int(np.searchsorted(bids, gb + dl.size))
-            if hi > lo:
-                acc[(bids[lo:hi] - gb).astype(np.int64)] *= bvals[lo:hi]
-        return _topk_from_scores(acc, base + bases[gen], k)
+        contrib = {
+            t: _contrib_cached(bytes(by_term[t]), base, dl, avgdl, k1, b, dl_tok)
+            for t in all_terms
+            if t in by_term
+        }
+        frames = []
+        for qid, qtf in queries.items():
+            acc = np.zeros(dl.size, dtype=np.float64)
+            for term in terms_sorted[qid]:  # fixed summation order == oracle
+                c = contrib.get(term)
+                if c is not None:
+                    acc[c[0]] += (qtf[term] * idf[term]) * c[1]
+            dead = _dead_mask(tombs, allows.get(qid), gbase, dl.size)
+            if dead is not None:
+                acc[dead] = 0.0
+            bst = boosts.get(qid)
+            if bst is not None:
+                bids, bvals = bst
+                lo = int(np.searchsorted(bids, gbase))
+                hi = int(np.searchsorted(bids, gbase + dl.size))
+                if hi > lo:
+                    acc[(bids[lo:hi] - gbase).astype(np.int64)] *= bvals[lo:hi]
+            top = _tagged(_topk_from_scores(acc, gbase, k), qid)
+            if len(top):
+                frames.append(top)
+        if len(frames) == 1:
+            return frames[0]
+        return pd.concat(frames, ignore_index=True) if frames else _empty_result()
 
     return kernel
 
 
-def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
-                        bases=None, dfs=None, tombs=None, allow=None,
+def _make_pruned_kernel(queries, N, avgdl, k1, b, shard_size, k,
+                        bases, dfs, tombs, allows=None, boosts=None,
                         profile=False):
     """Vectorized ITERATIVE block-max pruned kernel: WAND-grade block
     skipping with no per-posting Python (the scale answer to 'exhaustive
@@ -298,32 +321,26 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
     total, decode mode, alive-doc count, theta at decision time) instead
     of top-k rows — the per-shard evidence for "did block skipping fire on
     this query" that tail-latency tuning needs (VERDICT r3 task #5).
+
+    Takes the same arguments as :func:`_make_exhaustive_kernel` but only a
+    set of ONE query and no boost: a multiplier can lift a doc past any
+    unboosted block-max bound (:func:`_choose_kernel` never routes a
+    boosted query here).
     """
+    ((qid, qtf),) = queries.items()
+    assert not boosts, "block-max pruning is inadmissible under boost"
+    allow = (allows or {}).get(qid)
     terms_sorted = sorted(qtf)
-    bases = bases or {0: 0}
 
     def kernel(key, p_pdf: pd.DataFrame, dl: np.ndarray) -> pd.DataFrame:
         gen, shard = int(key[0]), int(key[1])
         base = shard * shard_size
         nd = dl.size
-        by_term = _postings_by_term(p_pdf, need_df=dfs is None)
+        by_term = _postings_by_term(p_pdf)
         # tombstone/filter mask applied at contribution time so the working
         # array (and thus theta) never counts dead docs — an inflated theta
         # could otherwise prune a live doc that belongs in the live top-k.
-        # ``allow`` (pushed filter context, B4) is the same mask inverted:
-        # docs OUTSIDE the allowed set are dead.
-        dead = None
-        if allow is not None:
-            dead = np.ones(nd, dtype=bool)
-            al = _tomb_local(allow, base + bases[gen], nd)
-            if al.size:
-                dead[al] = False
-        if tombs is not None and tombs.size:
-            tl = _tomb_local(tombs, base + bases[gen], nd)
-            if tl.size:
-                if dead is None:
-                    dead = np.zeros(nd, dtype=bool)
-                dead[tl] = True
+        dead = _dead_mask(tombs, allow, base + bases[gen], nd)
 
         # directories + weights + per-term block upper-bound step profiles
         dirs, steps = {}, {}
@@ -331,8 +348,8 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
             row = by_term.get(term)
             if row is None:
                 continue
-            df = dfs[term] if dfs is not None else row[1]
-            buf = bytes(row[0])
+            df = dfs[term]
+            buf = bytes(row)
             n, firsts, max_tfs, nb, offs = decode_directory(buf)
             if not n:
                 continue
@@ -352,11 +369,14 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
         dl_tok = _dl_token(dl)
         stats: list[tuple] = []  # profile rows: one per term processed
 
+        def live(off, vals):
+            if dead is None:
+                return off, vals
+            keep = ~dead[off]
+            return off[keep], vals[keep]
+
         def contrib_of(term, ids_t, tfs_t):
-            off = (ids_t - np.uint64(base)).astype(np.int64)
-            if dead is not None:
-                keep = ~dead[off]
-                off, tfs_t = off[keep], tfs_t[keep]
+            off, tfs_t = live((ids_t - np.uint64(base)).astype(np.int64), tfs_t)
             Kd = k1 * (1.0 - b + b * dl[off] / avgdl)
             return off, dirs[term][0] * (
                 tfs_t.astype(np.float64) / (tfs_t + Kd)
@@ -365,12 +385,9 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
         def full_contrib(term):
             """Full-decode contribution via the cross-query cache (hot
             terms decode once per worker; per-query w is a scalar)."""
-            off, norm = _contrib_cached(
+            off, norm = live(*_contrib_cached(
                 dirs[term][1], base, dl, avgdl, k1, b, dl_tok
-            )
-            if dead is not None:
-                keep = ~dead[off]
-                off, norm = off[keep], norm[keep]
+            ))
             return off, dirs[term][0] * norm
 
         order = sorted(dirs, key=lambda t: (-dirs[t][0], t))
@@ -383,12 +400,6 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
             nb0 = len(dirs[t0][3])
             stats.append((gen, shard, t0, dirs[t0][0], dirs[t0][7],
                           nb0, nb0, "seed", nd, float("nan")))
-        if len(order) == 1:
-            if profile:
-                return _profile_pdf(stats)
-            acc = np.zeros(nd, dtype=np.float64)
-            acc[off0] = c0
-            return _topk_from_scores(acc, base + bases[gen], k)
 
         working = np.zeros(nd, dtype=np.float64)
         working[off0] += c0
@@ -439,23 +450,26 @@ def _make_pruned_kernel(qtf, N, avgdl, k1, b, shard_size, k,
             if d is None or not len(d[0]):
                 continue
             acc[d[0]] += d[1]
-        return _topk_from_scores(acc, base + bases[gen], k)
+        return _tagged(_topk_from_scores(acc, base + bases[gen], k), qid)
 
     return kernel
 
 
-def _make_wand_kernel(qtf, N, avgdl, k1, b, shard_size, k,
-                      bases=None, dfs=None, tombs=None, allow=None):
+def _make_wand_kernel(queries, N, avgdl, k1, b, shard_size, k,
+                      bases, dfs, tombs, allows=None, boosts=None):
     """Block-max WAND per-shard kernel (north rule; SURVEY.md §2.8-B6).
 
     Term upper bound uses dl->0, which is STRICTLY above any achievable
     contribution for b<1 and dl>=1, so pruning at sum_ub <= theta can never
     drop a doc that ties theta — tie-break exactness is preserved.
     Blocks are skipped via the directory (first_doc_id per block) without
-    decoding; per-block max_tf refines the bound.
+    decoding; per-block max_tf refines the bound.  A set of ONE query
+    without boost, like :func:`_make_pruned_kernel`.
     """
+    ((qid, qtf),) = queries.items()
+    assert not boosts, "block-max pruning is inadmissible under boost"
+    allow = (allows or {}).get(qid)
     terms_sorted = sorted(qtf)
-    bases = bases or {0: 0}
 
     class TermState:
         __slots__ = (
@@ -526,27 +540,16 @@ def _make_wand_kernel(qtf, N, avgdl, k1, b, shard_size, k,
         # dead docs are scored (states must advance past them) but never
         # pushed, so theta stays the k-th best LIVE score — a valid (never
         # inflated) pruning bound for the live top-k
-        dead: set[int] = set()
-        if tombs is not None and tombs.size:
-            dead = set(
-                (base + _tomb_local(tombs, base + bases[gen], dl.size))
-                .tolist()
-            )
-        allowed: set[int] | None = None
-        if allow is not None:
-            allowed = set(
-                (base + _tomb_local(allow, base + bases[gen], dl.size))
-                .tolist()
-            )
+        dead = _dead_mask(tombs, allow, base + bases[gen], dl.size)
 
         states = []
-        by_term = _postings_by_term(p_pdf, need_df=dfs is None)
+        by_term = _postings_by_term(p_pdf)
         for term in terms_sorted:
             row = by_term.get(term)
             if row is None:
                 continue
-            w = qtf[term] * _idf(N, dfs[term] if dfs is not None else row[1])
-            st = TermState(term, w, bytes(row[0]))
+            w = qtf[term] * _idf(N, dfs[term])
+            st = TermState(term, w, bytes(row))
             if st.n:
                 # strict UB: dl -> 0 (never achieved; dl >= 1 for matches)
                 mt = float(max(st.max_tfs.max(), 1))
@@ -585,9 +588,7 @@ def _make_wand_kernel(qtf, N, avgdl, k1, b, shard_size, k,
             pivot_doc = live[pivot_i].cur_doc()
             if live[0].cur_doc() == pivot_doc:
                 s = score_doc(pivot_doc)
-                if pivot_doc in dead or (
-                    allowed is not None and pivot_doc not in allowed
-                ):
+                if dead is not None and dead[pivot_doc - base]:
                     continue  # advance happened in score_doc; never push
                 entry = (s, -pivot_doc)
                 if len(heap) < k:
@@ -604,12 +605,11 @@ def _make_wand_kernel(qtf, N, avgdl, k1, b, shard_size, k,
         if not heap:
             return _empty_result()
         out = sorted(heap, key=lambda e: (-e[0], -e[1]))
-        return pd.DataFrame(
-            {
-                "doc_id": [bases[gen] - d for _, d in out],
-                "score": [s for s, _ in out],
-            }
-        ).astype({"doc_id": "int64", "score": "float64"})
+        return pd.DataFrame({
+            "query_id": qid,
+            "doc_id": np.array([bases[gen] - d for _, d in out], np.int64),
+            "score": np.array([s for s, _ in out], np.float64),
+        })
 
     return kernel
 
@@ -652,11 +652,8 @@ class IndexHandle:
                     spark.read.parquet(seg.path_of(d, seg.NORMS))
                     .withColumn("gen", tag)
                 )
-            self.postings = p_parts[0]
-            self.norms = n_parts[0]
-            for p, n in zip(p_parts[1:], n_parts[1:]):
-                self.postings = self.postings.unionByName(p)
-                self.norms = self.norms.unionByName(n)
+            self.postings = reduce(DataFrame.unionByName, p_parts)
+            self.norms = reduce(DataFrame.unionByName, n_parts)
             merged = spark.read.parquet(
                 seg.path_of(index_dir, seg.STATS_MERGED)
             ).collect()[0]
@@ -683,13 +680,16 @@ class IndexHandle:
         # float64 array}) — set by warm() below the preload cap; enables
         # the single-input kernel plan in _apply_kernel.
         self._norms_bcast = None
-        # analyzed-plan cache: (qtf items, k, kernel) -> top-k DataFrame.
-        # A query service sees the same query texts repeatedly; rebuilding
-        # + re-analyzing the identical cogroup plan cost ~45 ms/query
-        # (profiled round 6).  The cache holds PLANS, never results —
-        # every collect re-executes against the live relations — and dies
-        # with the handle (engine.build/upsert/delete reset the handle).
-        self._plan_cache: dict = {}
+        # analyzed-plan cache: (qtf items, k, kernel) -> top-k DataFrame,
+        # least recently used evicted past _PLAN_CACHE_CAP (see
+        # _cached_plan).  A query service sees the same query texts
+        # repeatedly; rebuilding + re-analyzing the identical plan cost
+        # ~45 ms/query (profiled round 6).  The cache holds PLANS, never
+        # results — every collect re-executes against the live relations —
+        # and dies with the handle (engine.build/upsert/delete reset the
+        # handle).
+        self._plan_cache: OrderedDict = OrderedDict()
+        self._plan_lock = threading.Lock()
         # upsert/delete tombstones (GLOBAL doc_ids, sorted) — masked inside
         # the kernels; empty for indexes that never upserted (the common
         # case: zero overhead).  Stats keep counting tombstoned docs until
@@ -742,17 +742,39 @@ class IndexHandle:
                     "doc_id", F.col("doc_id") + F.lit(int(g["base"]))
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return self._drop_tombstoned(out)
+        return self._drop_tombstoned(reduce(
+            lambda a, p: a.unionByName(p, allowMissingColumns=True), parts
+        ))
 
     def _drop_tombstoned(self, df: DataFrame) -> DataFrame:
+        """Broadcast left-anti join against the tombstone ids: the plan
+        carries them as one local relation, never as an IN-list
+        expression that grows with every delete."""
         if not self.tombstones.size:
             return df
-        return df.where(
-            ~F.col("doc_id").isin([int(x) for x in self.tombstones])
+        tombs = self.spark.createDataFrame(
+            pd.DataFrame({"doc_id": self.tombstones})
         )
+        return df.join(F.broadcast(tombs), "doc_id", "left_anti")
+
+    def _cached_plan(self, key, build) -> DataFrame:
+        """The plan cached under ``key``, else ``build()``'s, cached.
+        Bounded LRU: a hit becomes most recent, an insert past
+        _PLAN_CACHE_CAP evicts the least recently used plan.  Serving
+        threads share the handle, so map updates hold a lock (the build
+        itself runs outside it)."""
+        with self._plan_lock:
+            plan = self._plan_cache.get(key)
+            if plan is not None:
+                self._plan_cache.move_to_end(key)
+                return plan
+        plan = build()
+        with self._plan_lock:
+            self._plan_cache[key] = plan
+            self._plan_cache.move_to_end(key)
+            while len(self._plan_cache) > _PLAN_CACHE_CAP:
+                self._plan_cache.popitem(last=False)
+        return plan
 
     def warm(
         self, postings: bool = True, preload_terms_cap: int = 2_000_000,
@@ -799,18 +821,12 @@ class IndexHandle:
                 chunks.setdefault((int(r["gen"]), int(r["shard"])), []).append(
                     (int(r["chunk"]), r["doc_lens"])
                 )
+            # built by _norms_dl, as on the cogroup path, so scores and the
+            # worker contribution-cache keys are bit-identical to it
             norms_data = {
-                gs: np.concatenate(
-                    [
-                        np.frombuffer(b, dtype="<i4")
-                        for _, b in sorted(rows)
-                    ]
-                ).astype(np.float64)
+                gs: _norms_dl(pd.DataFrame(rows, columns=["chunk", "doc_lens"]))
                 for gs, rows in chunks.items()
             }
-            # identical layout to _norms_dl (chunk-sorted concat, float64),
-            # so scores and the worker contribution-cache keys are
-            # bit-identical to the cogroup path
             self._norms_bcast = self.spark.sparkContext.broadcast(norms_data)
         if postings:
             if self._norms_bcast is not None:
@@ -852,17 +868,19 @@ class IndexHandle:
 
 _KERNELS = {
     "exhaustive": _make_exhaustive_kernel,
-    "wand_ref": _make_wand_kernel,
     "pruned": _make_pruned_kernel,
+    # the doc-at-a-time Python WAND (VERDICT r3 task #6): a TEST-ONLY
+    # ORACLE of the vectorized block-max kernels — per-posting Python
+    # pointer chasing, measured 3.5x slower than exhaustive at sf1.0,
+    # never a production win
+    "wand_ref": _make_wand_kernel,
 }
 
-# DEMOTED (VERDICT r3 task #6): the doc-at-a-time Python WAND kernel is a
-# TEST-ONLY ORACLE of the vectorized block-max kernels ('wand_ref' —
-# per-posting Python pointer chasing, measured 3.5x slower than exhaustive
-# at sf1.0, never a production win).  The public 'wand'/use_wand surface now
-# resolves to 'pruned', the vectorized term-at-a-time block-max pruning
-# kernel — same block-skip idea, same exactness guarantees, no Python loop.
-_KERNEL_ALIASES = {"wand": "pruned"}
+# Adaptive default: block-skip bookkeeping only pays once the candidate
+# pool (summed global df) exceeds this many times k — rare-term/no-hit
+# queries never fill the heap threshold, so every block stays competitive
+# and the per-block upper-bound pass is pure overhead.
+_PRUNE_RATIO = 16
 
 # Filter-context pushdown (B4): survivor sets up to this many doc_ids ship
 # inside the kernel closure as a sorted int64 allow-mask (~2 MB at the cap —
@@ -878,69 +896,72 @@ _FILTER_PUSH_CAP = 1 << 18
 # the right plan: the boost table itself is distributed data there.
 _BOOST_PUSH_CAP = 1 << 17
 
-
-def _scored_df(
-    handle: IndexHandle, qtf: dict, k: int, use_wand: bool,
-    kernel_name: str | None = None,
-    allow: np.ndarray | None = None,
-    boost_arrs: tuple[np.ndarray, np.ndarray] | None = None,
-) -> DataFrame:
-    meta = handle.meta
-    dfs = handle.global_dfs(qtf)
-    n_cand = sum(dfs.get(t, 0) for t in qtf)
-    if boost_arrs is not None:
-        # a multiplier >1 can promote a doc past any unboosted block-max
-        # upper bound, so pruning is inadmissible under pushed boost —
-        # the exhaustive kernel scores every match and stays exact.
-        kernel_name = "exhaustive"
-    elif kernel_name is None and not use_wand:
-        # adaptive default (all kernels are rank-identical, so this is a
-        # pure cost choice): block-skip bookkeeping only pays once the
-        # candidate pool dwarfs k — rare-term/no-hit queries never fill
-        # the heap threshold, so every block stays competitive and the
-        # per-block upper-bound pass is pure overhead
-        kernel_name = "pruned" if n_cand > 16 * k else "exhaustive"
-    kernel_name = kernel_name or ("wand" if use_wand else "exhaustive")
-    make = _KERNELS[_KERNEL_ALIASES.get(kernel_name, kernel_name)]
-    if allow is not None and allow.size == 0:
-        return handle.spark.createDataFrame([], _RESULT_SCHEMA)
-    extra = {"boost": boost_arrs} if boost_arrs is not None else {}
-    kernel = make(
-        dict(qtf), meta["num_docs"], meta["avg_doc_len"] or 1.0,
-        meta["k1"], meta["b"], meta["shard_size"], k,
-        bases=handle.bases, dfs=dfs,
-        tombs=handle.tombstones if handle.tombstones.size else None,
-        allow=allow, **extra,
-    )
-    # Execution-width choice (driver-side, from the same dfs the kernel
-    # choice uses): a cache-served light query's whole kernel pass costs
-    # less than one python-task round trip per shard, so running all
-    # shard groups in ONE task (coalesce of the cached scan — a narrow
-    # dependency, no shuffle) beats an n_shards-task wave; past the cap
-    # the per-shard kernels are the cost and must run in parallel.
-    # wand_ref bypasses the contribution cache (decode every time), so it
-    # always spreads.
-    resolved = _KERNEL_ALIASES.get(kernel_name, kernel_name)
-    one_task = resolved != "wand_ref" and n_cand <= _COALESCE_CAP
-    return _apply_kernel(
-        handle, qtf, kernel, _RESULT_SCHEMA, one_task=one_task,
-        wide=resolved == "wand_ref",
-    )
-
-
 # Candidate-postings volume below which a single-task kernel pass beats
 # an n_shards-wide task wave (cache-served accumulate ~80 ns/posting vs
 # ~10 ms/python-task dispatch: break-even around a million postings; set
 # conservatively).  Driver-side estimate from exact global dfs.
 _COALESCE_CAP = 1 << 19
 
+# Plans kept per handle by search()'s plan cache (least recently used
+# evicted first).
+_PLAN_CACHE_CAP = 512
+
+
+def _choose_kernel(
+    queries: dict, dfs: dict, k: int, kernel: str | None = None,
+    boosted: bool = False,
+) -> tuple[str, int]:
+    """(kernel name, the set's summed global df) — the one kernel choice,
+    shared by :func:`_candidates` and :func:`profile_query`.
+
+    Every set of several queries, and any boosted query, runs the
+    exhaustive set kernel: a multiplier >1 can promote a doc past any
+    unboosted block-max upper bound, so pruning is inadmissible under
+    pushed boost.  A set of one query without boost takes ``kernel`` when
+    given, else the adaptive default (all kernels are rank-identical, so
+    this is a pure cost choice): 'pruned' once the candidate pool exceeds
+    ``_PRUNE_RATIO * k``, else 'exhaustive'."""
+    n_cand = sum(dfs[t] for q in queries.values() for t in q)
+    if len(queries) != 1 or boosted:
+        return "exhaustive", n_cand
+    if kernel is not None:
+        return kernel, n_cand
+    return ("pruned" if n_cand > _PRUNE_RATIO * k else "exhaustive"), n_cand
+
+
+def _kernel_width(handle: IndexHandle, kernel_name: str, n_cand: int) -> int:
+    """Kernel-stage task count on the broadcast-norms plan.  A cache-served
+    light set's whole kernel pass costs less than one python-task round
+    trip per shard, so width 1 (all shard groups in ONE task) beats an
+    n_shards-task wave; past _COALESCE_CAP the per-shard kernels are the
+    cost and run one group per task (hash collisions then occasionally
+    co-locate two shard kernels, which is cheap when they are
+    contribution-cache-served — width n beat 4n by ~15% on the cache-hot
+    heavy suite).  wand_ref bypasses the contribution cache (decodes every
+    time, a collision serializes two 0.4 s kernels), so it spreads over 4x
+    the group count."""
+    n_groups = max(1, int(handle.meta["n_shards"])) * len(handle.bases)
+    if kernel_name == "wand_ref":
+        return 4 * n_groups
+    return 1 if n_cand <= _COALESCE_CAP else n_groups
+
+
+def _make_kernel(name: str, handle: IndexHandle, queries: dict, k: int,
+                 dfs: dict, **kw):
+    meta = handle.meta
+    return _KERNELS[name](
+        queries, meta["num_docs"], meta["avg_doc_len"] or 1.0,
+        meta["k1"], meta["b"], meta["shard_size"], k,
+        handle.bases, dfs, handle.tombstones, **kw,
+    )
+
 
 def _apply_kernel(
-    handle: IndexHandle, qtf: dict, kernel, schema, empty_fn=_empty_result,
-    one_task: bool = False, wide: bool = False,
+    handle: IndexHandle, terms: list, kernel, schema, width: int,
+    empty_fn=_empty_result,
 ) -> DataFrame:
     """Run a per-(gen, shard) kernel over the term-pruned postings scan —
-    shared by scoring, batching and profiling.
+    shared by scoring and profiling.
 
     Warmed handles with a driver-resident norms broadcast take the
     SINGLE-INPUT path: ``groupby(gen, shard).applyInPandas`` over postings
@@ -951,33 +972,23 @@ def _apply_kernel(
     scan at all (guide §4: pass only the columns the function needs).
     The doc-length arrays are built with the exact `_norms_dl` layout, so
     kernel math and the cross-query contribution-cache keys are unchanged
-    bit-for-bit.
+    bit-for-bit.  ``width`` (:func:`_kernel_width`) is the kernel stage's
+    task count on this path.
 
     Handles without the broadcast (cold, or corpora past the warm()
     preload cap — the 100 TB case, where per-executor norm chunks must
     stay distributed) keep the cogroup plan: persisted+co-partitioned when
     warmed, semi-join-pruned norms when cold."""
-    postings = handle.postings.where(F.col("term").isin(list(qtf)))
+    postings = handle.postings.where(F.col("term").isin(list(terms)))
     bcast = handle._norms_bcast
     if bcast is not None:
         # Explicit kernel-stage width (REPARTITION_BY_NUM — AQE respects
         # it): the term-pruned rows are tiny (<= |terms| x shards posting
         # buffers), so this exchange costs ~nothing, while keeping the
-        # SCAN+filter parallel across the cached partitions.  Width 1 for
-        # cache-light queries (one python-task round trip instead of a
-        # task per shard: the whole kernel pass is cheaper than the
-        # wave); the group count for heavy ones (hash collisions then
-        # occasionally co-locate two shard kernels, which is cheap when
-        # they are contribution-cache-served — width n beat 4n by ~15%
-        # on the cache-hot heavy suite); 4x the group count for ``wide``
-        # kernels (wand_ref, which decodes every time: a collision there
-        # serializes two 0.4 s kernels, so collision-freeness wins).
-        # A coalesce(1) instead would serialize the scan itself
-        # (measured +20 ms) — the narrow dependency folds the filter
-        # into the single task.
-        n_groups = max(1, int(handle.meta["n_shards"])) * len(handle.bases)
-        w = 1 if one_task else (4 * n_groups if wide else n_groups)
-        postings = postings.repartition(w, "gen", "shard")
+        # SCAN+filter parallel across the cached partitions.  A
+        # coalesce(1) instead would serialize the scan itself (measured
+        # +20 ms); the repartition folds the filter into the scan tasks.
+        postings = postings.repartition(width, "gen", "shard")
 
         def run_bcast(key, p_pdf):
             dl = bcast.value.get((int(key[0]), int(key[1])))
@@ -1011,216 +1022,6 @@ def _apply_kernel(
     )
 
 
-def profile_query(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    k: int = 10,
-    handle: IndexHandle | None = None,
-) -> tuple[dict, DataFrame]:
-    """Kernel introspection for one query: what would the default search
-    path DO, and did block-max pruning fire?
-
-    Returns ``(decision, stats_df)``:
-
-    * ``decision`` — the driver-side adaptive-kernel choice replayed with
-      its inputs: {kernel, n_candidates, threshold, k, terms: {term: df}}.
-    * ``stats_df`` — the pruned kernel run in profile mode: one row per
-      (gen, shard, term) with n_blocks / blocks_decoded / decode_mode
-      ('seed' = heaviest term, full decode; 'full' = >50% blocks alive so
-      cache-served full decode; 'selective' = block-skip fired) plus the
-      alive-doc count and theta at decision time.  The stats run IS the
-      real kernel (same closure, profile flag) — no simulation drift.
-
-    This is the tuning loop for tail queries: a hot multi-term query whose
-    rows all say decode_mode='full', alive_docs≈shard size has no skippable
-    work (raise theta seeding / reorder terms); one that says 'selective'
-    with small blocks_decoded is already pruned and its cost is elsewhere.
-    """
-    handle = handle or IndexHandle(spark, index_dir)
-    meta = handle.meta
-    qtf = analyze_query(query_text, meta["mode"])
-    if not qtf:
-        return (
-            {"kernel": None, "n_candidates": 0,
-             "threshold": 16 * k, "k": k, "terms": {}},
-            spark.createDataFrame([], _PROFILE_SCHEMA),
-        )
-    dfs = handle.global_dfs(qtf)
-    n_cand = sum(dfs.get(t, 0) for t in qtf)
-    decision = {
-        "kernel": "pruned" if n_cand > 16 * k else "exhaustive",
-        "n_candidates": int(n_cand),
-        "threshold": 16 * k,
-        "k": k,
-        "terms": {t: int(dfs.get(t, 0)) for t in qtf},
-    }
-    kernel = _make_pruned_kernel(
-        dict(qtf), meta["num_docs"], meta["avg_doc_len"] or 1.0,
-        meta["k1"], meta["b"], meta["shard_size"], k,
-        bases=handle.bases, dfs=dfs,
-        tombs=handle.tombstones if handle.tombstones.size else None,
-        profile=True,
-    )
-    return decision, _apply_kernel(
-        handle, qtf, kernel, _PROFILE_SCHEMA, empty_fn=_empty_profile
-    )
-
-
-def search(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    k: int = 10,
-    use_wand: bool = False,
-    include_meta: bool = False,
-    filter_doc_ids: DataFrame | None = None,
-    boost: DataFrame | None = None,
-    handle: IndexHandle | None = None,
-    kernel: str | None = None,
-    _no_push: bool = False,
-) -> DataFrame:
-    """Top-k BM25. Returns DataFrame (doc_id, score [, repo/path/...]).
-
-    ``_no_push`` (internal): skip the pushdown attempt and take the exact
-    score-then-join path directly — used by the batch path for queries
-    :func:`_prepare_pushdowns` already decided against, so the deciding
-    collect is not paid twice.
-
-    ``kernel``: None (default) picks adaptively by global df — 'pruned'
-    (vectorized block-max skip) once the candidate pool dwarfs k, else
-    'exhaustive' (decode-everything; rare-term queries never fill the heap
-    threshold, so skip bookkeeping is pure overhead there).  'wand' (and
-    ``use_wand=True``) is an alias of 'pruned': the doc-at-a-time Python
-    WAND is demoted to the test-only oracle 'wand_ref' (per-posting Python
-    — correct but never a production win; kept for its equivalence
-    property).  All kernels are rank-identical (equivalence-tested), so
-    the choice is cost-only.
-    Filter paths push survivor sets <= _FILTER_PUSH_CAP into the kernel as
-    an allow-mask (top-k of the filtered set directly, exact); boost maps
-    <= _BOOST_PUSH_CAP with clean values (finite, nonzero, unique ids) push
-    as a multiplier array applied inside the exhaustive kernel before its
-    heap (exact: every match's boosted score is materialized).  Larger
-    sets — and boost tables with duplicate ids / zero / non-finite values,
-    whose edge semantics belong to the join — fall back to
-    score-everything + join.
-
-    ``boost``: optional (doc_id, _boost) DataFrame — multiplicative
-    function-score applied AFTER BM25, exact either way: a per-doc
-    multiplier can promote a doc past the unboosted per-shard heap cut, so
-    boosted scoring is never pruned (B3 on the segment path, reference:
-    backend/api/main.py:293-314).
-    ``filter_doc_ids``: optional (doc_id) DataFrame — exact filter context
-    (B4): membership only, never affects scores, applied before the limit.
-    """
-    handle = handle or IndexHandle(spark, index_dir)
-    qtf = analyze_query(query_text, handle.meta["mode"])
-    if not qtf:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    scored = None
-    if filter_doc_ids is not None or boost is not None:
-        # Pushdown: if the filter survivor set / boost map is small enough
-        # to ship in the task closure, push it INTO the kernel — the
-        # allow-mask is the tombstone mechanism inverted, the boost map a
-        # multiplier array applied before the per-shard heap — so the heap
-        # holds the top-k of the filtered/boosted set directly (exact),
-        # instead of scoring every match with k = shard_size and
-        # joining afterwards.  At 100 TB a selective filter (lang, repo,
-        # date range) or a small promotion table turns a score-everything
-        # pass into a top-k pass.  Oversized inputs (and boost edge values
-        # whose semantics belong to the join) fall back to the exhaustive
-        # score-then-join path below.
-        if _no_push:
-            allows, boost_arrs_m, fallback = {}, {}, {"q"}
-        else:
-            allows, boost_arrs_m, fallback = _prepare_pushdowns(
-                {"q": filter_doc_ids} if filter_doc_ids is not None else {},
-                {"q": boost} if boost is not None else {},
-            )
-        if not fallback:
-            scored = _scored_df(
-                handle, qtf, k, use_wand=False,
-                allow=allows.get("q"), boost_arrs=boost_arrs_m.get("q"),
-            )
-    if scored is not None:
-        pass
-    elif filter_doc_ids is not None or boost is not None:
-        # exactness requires scoring all matches (per-shard heaps can't know
-        # the filter survivors / post-multiplier order).
-        scored = _scored_df(
-            handle, qtf, handle.meta["shard_size"], use_wand=False
-        )
-        if boost is not None:
-            scored = (
-                # no broadcast hint: boost tables range from tiny (a handful
-                # of promoted docs) to per-doc (recency) — let AQE pick.
-                scored.join(boost.select("doc_id", "_boost"), "doc_id", "left")
-                .withColumn(
-                    "score",
-                    F.col("score") * F.coalesce(F.col("_boost"), F.lit(1.0)),
-                )
-                .drop("_boost")
-            )
-        if filter_doc_ids is not None:
-            scored = scored.join(
-                filter_doc_ids.select("doc_id"), "doc_id", "left_semi"
-            )
-    else:
-        # Plan-skeleton cache (prepared-statement shape): a query service
-        # sees the same texts repeatedly, and rebuilding + re-analyzing
-        # the identical plan costs ~45 ms/query (build_df ~31 ms py4j +
-        # first-collect Catalyst work, scripts/probe_query_phases.py).
-        # Cached per handle and keyed on everything the plan closes over
-        # — (qtf, k, kernel choice); dfs/tombstones/meta are fixed per
-        # handle, and every index mutation replaces the handle.  Each
-        # collect on the cached DataFrame re-executes the plan against
-        # the live relations: plans are cached, results never.
-        ck = (
-            tuple(sorted(qtf.items())), k,
-            kernel or ("wand" if use_wand else None), bool(use_wand),
-        )
-        cached = handle._plan_cache.get(ck)
-        if cached is not None:
-            return _with_meta(handle, cached, k) if include_meta else cached
-        scored = _scored_df(
-            handle, qtf, k, use_wand,
-            kernel_name=kernel or ("wand" if use_wand else None),
-        )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if len(handle._plan_cache) >= 512:  # bounded: wholesale clear
-            handle._plan_cache.clear()
-        handle._plan_cache[ck] = topk
-        return _with_meta(handle, topk, k) if include_meta else topk
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if include_meta:
-        topk = _with_meta(handle, topk, k)
-    return topk
-
-
-def _with_meta(handle: IndexHandle, topk: DataFrame, k: int) -> DataFrame:
-    dm = handle.doc_meta_df()
-    return (
-        dm.join(F.broadcast(topk), "doc_id")
-        .select("doc_id", "score", "repo", "path", "commit", "lang")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-
-
-def search_all(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    handle: IndexHandle | None = None,
-) -> DataFrame:
-    """Score ALL matching docs (no limit) — used for exact filtered search
-    and for oracle comparisons. Same kernels with k = shard_size."""
-    handle = handle or IndexHandle(spark, index_dir)
-    qtf = analyze_query(query_text, handle.meta["mode"])
-    if not qtf:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    return _scored_df(handle, qtf, handle.meta["shard_size"], use_wand=False)
-
-
 def _prepare_pushdowns(
     filters: dict[str, DataFrame],
     boosts: dict[str, DataFrame],
@@ -1229,10 +1030,9 @@ def _prepare_pushdowns(
 
     Returns (allows, boost_arrs, fallback_qids): ``allows[qid]`` is the
     sorted int64 allow-mask, ``boost_arrs[qid]`` the sorted (ids, vals)
-    multiplier pair — same caps and edge rules as the single-query
-    pushdown in :func:`search`; any query whose table is oversized or
-    edge-valued lands in ``fallback_qids`` and must be served by the
-    exact single-query join path instead."""
+    multiplier pair; any query whose table is oversized or edge-valued
+    lands in ``fallback_qids`` and must be served by the exact
+    score-everything + join path instead (:func:`_fallback_topk`)."""
     allows: dict = {}
     boost_arrs: dict = {}
     fallback: set = set()
@@ -1278,170 +1078,54 @@ def _prepare_pushdowns(
     return allows, boost_arrs, fallback
 
 
-def _make_batch_kernel(queries: dict, N: int, avgdl: float, k1: float,
-                       b: float, shard_size: int, k: int,
-                       bases=None, dfs=None, tombs=None,
-                       allows=None, boosts=None):
-    """Multi-query per-shard kernel: decode each needed posting list ONCE,
-    accumulate into one score vector per query, bounded top-k per query.
-
-    This is the eval-pipeline shape (reference runs 75 TREC topics per run,
-    reference: backend/evaluation/evaluation_pipeline.py:122-150): one Spark
-    job for the whole query set amortizes scheduling + scan over all
-    queries instead of paying it per query.
-
-    ``allows``/``boosts``: per-query pushed filter masks / boost
-    multiplier pairs from :func:`_prepare_pushdowns` — each applied to its
-    query's score vector before that query's per-shard heap (same
-    exactness argument as the single-query kernel: the batch kernel is
-    exhaustive, every match's final score is materialized)."""
-    # term -> [(query_id, qtf*idf placeholder computed with df later)]
-    all_terms = sorted({t for q in queries.values() for t in q})
-    bases = bases or {0: 0}
-    allows = allows or {}
-    boosts = boosts or {}
-
-    def kernel(key, p_pdf: pd.DataFrame, dl: np.ndarray) -> pd.DataFrame:
-        empty = _empty_batch_result()
-        gen, shard = int(key[0]), int(key[1])
-        base = shard * shard_size
-        by_term = _postings_by_term(p_pdf, need_df=dfs is None)
-        tl = (
-            _tomb_local(tombs, base + bases[gen], dl.size)
-            if tombs is not None and tombs.size
-            else None
-        )
-        # decode + per-term normalized contribution, shared across queries
-        # (and across batch invocations via the worker contribution cache)
-        dl_tok = _dl_token(dl)
-        contrib: dict[str, tuple[np.ndarray, np.ndarray, float]] = {}
-        for term in all_terms:
-            row = by_term.get(term)
-            if row is None:
-                continue
-            off, norm = _contrib_cached(
-                bytes(row[0]), base, dl, avgdl, k1, b, dl_tok
-            )
-            contrib[term] = (
-                off, norm,
-                _idf(N, dfs[term] if dfs is not None else row[1]),
-            )
-        frames = []
-        for qid, qtf in queries.items():
-            acc = np.zeros(dl.size, dtype=np.float64)
-            for term in sorted(qtf):  # fixed order == oracle
-                c = contrib.get(term)
-                if c is None:
-                    continue
-                off, norm_tf, idf = c
-                acc[off] += (qtf[term] * idf) * norm_tf
-            if tl is not None and tl.size:
-                acc[tl] = 0.0
-            al = allows.get(qid)
-            if al is not None:
-                keep = np.zeros(dl.size, dtype=bool)
-                keep[_tomb_local(al, base + bases[gen], dl.size)] = True
-                acc[~keep] = 0.0
-            bst = boosts.get(qid)
-            if bst is not None:
-                bids, bvals = bst
-                gb = base + bases[gen]
-                lo = int(np.searchsorted(bids, gb))
-                hi = int(np.searchsorted(bids, gb + dl.size))
-                if hi > lo:
-                    acc[(bids[lo:hi] - gb).astype(np.int64)] *= bvals[lo:hi]
-            top = _topk_from_scores(acc, base + bases[gen], k)
-            if len(top):
-                top.insert(0, "query_id", qid)
-                frames.append(top)
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    return kernel
-
-
-def _scored_many(
-    spark: SparkSession,
-    index_dir: str,
-    query_texts: dict[str, str],
-    k: int,
-    handle: IndexHandle | None,
-    allows: dict | None = None,
-    boost_arrs: dict | None = None,
-) -> DataFrame | None:
-    """Shared body of :func:`search_many` / :func:`search_many_rows`:
-    per-(gen, shard) batch-kernel scoring — one postings scan for the
-    union of all query terms, each posting list decoded once per shard
-    for the whole batch — with per-shard per-query top-k output
-    (query_id, doc_id, score).  None when no query has tokens."""
-    handle = handle or IndexHandle(spark, index_dir)
-    meta = handle.meta
-    queries = {
-        qid: dict(analyze_query(text, meta["mode"]))
-        for qid, text in query_texts.items()
-    }
-    queries = {qid: q for qid, q in queries.items() if q}
-    if not queries:
-        return None
+def _score_set(
+    handle: IndexHandle, queries: dict, k: int, kernel: str | None = None,
+    allows: dict | None = None, boosts: dict | None = None,
+) -> DataFrame:
+    """One kernel over one term-pruned postings scan for a query set:
+    per-(gen, shard) per-query top-k ``(query_id, doc_id, score)``."""
+    boosts = {q: v for q, v in (boosts or {}).items() if q in queries}
     terms = sorted({t for q in queries.values() for t in q})
-    kernel = _make_batch_kernel(
-        queries, meta["num_docs"], meta["avg_doc_len"] or 1.0,
-        meta["k1"], meta["b"], meta["shard_size"], k,
-        bases=handle.bases, dfs=handle.global_dfs(terms),
-        tombs=handle.tombstones if handle.tombstones.size else None,
-        allows=allows, boosts=boost_arrs,
-    )
+    dfs = handle.global_dfs(terms)
+    name, n_cand = _choose_kernel(queries, dfs, k, kernel, bool(boosts))
+    fn = _make_kernel(name, handle, queries, k, dfs,
+                      allows=allows, boosts=boosts)
     return _apply_kernel(
-        handle, {t: 1 for t in terms}, kernel,
-        "query_id string, doc_id long, score double",
-        empty_fn=_empty_batch_result,
+        handle, terms, fn, _CANDIDATE_SCHEMA,
+        _kernel_width(handle, name, n_cand),
     )
 
 
-def _fallback_topk_df(
-    spark: SparkSession,
-    index_dir: str,
-    fb_qids: list[str],
-    query_texts: dict[str, str],
+def _fallback_topk(
+    scored: DataFrame,
+    qids: list[str],
     k: int,
-    handle: IndexHandle,
-    filters: dict[str, DataFrame] | None,
-    boosts: dict[str, DataFrame] | None,
-) -> DataFrame | None:
-    """Exact score-then-join path for the whole FALLBACK set (queries
-    whose filter/boost tables exceeded the push caps or carry
-    join-defined edge values) as ONE Spark job.
+    filters: dict[str, DataFrame],
+    boosts: dict[str, DataFrame],
+) -> DataFrame:
+    """Exact score-then-join top-k for the FALLBACK set (queries whose
+    filter/boost tables exceeded the push caps or carry join-defined edge
+    values), over ``scored`` = every match of those queries (k =
+    shard_size, one kernel pass for the whole set).
 
-    Round-4 verdict #3: the per-query ``search(..., _no_push=True)``
-    driver loop made a batch with Q oversized-table queries degrade to Q
-    sequential jobs.  Here the batch kernel scores ALL matches for every
-    fallback query in one pass (k = shard_size, the exactness bound the
-    single-query path uses), the per-query boost/filter tables are
-    unioned with a ``query_id`` key and joined once, and the per-query
-    top-k is one Window.  Row-identical to the old loop: the same left
-    boost join (duplicate ids duplicate rows, NULL multipliers coalesce
-    to 1.0), the same left-semi filter, the same (score desc, doc_id
-    asc) order.  Returns (query_id, doc_id, score, rank) or None when no
-    fallback query has tokens."""
-    from functools import reduce
-
+    The per-query boost/filter tables are unioned with a ``query_id`` key
+    and joined once, and the per-query top-k is one Window: a left boost
+    join (duplicate ids duplicate rows, NULL multipliers coalesce to 1.0),
+    a left-semi filter, the (score desc, doc_id asc) order.  Round-4
+    verdict #3: a per-query driver loop here made a batch with Q
+    oversized-table queries degrade to Q sequential jobs."""
     from pyspark.sql import Window
 
-    fb_q = {qid: query_texts[qid] for qid in fb_qids}
-    scored = _scored_many(
-        spark, index_dir, fb_q, handle.meta["shard_size"], handle
-    )
-    if scored is None:
-        return None
     b_parts = [
-        boosts[qid].select(
-            F.lit(qid).alias("query_id"), "doc_id", "_boost"
-        )
-        for qid in fb_qids
-        if boosts and qid in boosts
+        boosts[qid].select(F.lit(qid).alias("query_id"), "doc_id", "_boost")
+        for qid in qids
+        if qid in boosts
     ]
     if b_parts:
         ball = reduce(DataFrame.unionByName, b_parts)
         scored = (
+            # no broadcast hint: boost tables range from tiny (a handful
+            # of promoted docs) to per-doc (recency) — let AQE pick.
             scored.join(ball, ["query_id", "doc_id"], "left")
             .withColumn(
                 "score",
@@ -1449,21 +1133,20 @@ def _fallback_topk_df(
             )
             .drop("_boost")
         )
-    f_parts = [
-        filters[qid].select(F.lit(qid).alias("query_id"), "doc_id")
-        for qid in fb_qids
-        if filters and qid in filters
-    ]
-    if f_parts:
+    has_f = sorted(qid for qid in qids if qid in filters)
+    if has_f:
         # queries WITHOUT a filter table must keep all their rows, but a
         # where/union split would re-evaluate the kernel subtree once per
         # branch (two postings passes — caught by the EXPLAIN audit).
         # One left join against the DISTINCT allow-lists (distinct ==
         # left-semi row semantics) + a keep predicate costs one pass.
-        fall = reduce(DataFrame.unionByName, f_parts).distinct()
-        has_f = sorted(
-            {qid for qid in fb_qids if filters and qid in filters}
-        )
+        fall = reduce(
+            DataFrame.unionByName,
+            [
+                filters[qid].select(F.lit(qid).alias("query_id"), "doc_id")
+                for qid in has_f
+            ],
+        ).distinct()
         scored = (
             scored.join(
                 fall.withColumn("_allow", F.lit(True)),
@@ -1479,9 +1162,204 @@ def _fallback_topk_df(
         F.desc("score"), F.asc("doc_id")
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        scored.withColumn("_rank", F.row_number().over(w))
+        .where(F.col("_rank") <= k)
+        .drop("_rank")
     )
+
+
+def _candidates(
+    handle: IndexHandle,
+    queries: dict[str, dict],
+    k: int,
+    kernel: str | None = None,
+    filters: dict[str, DataFrame] | None = None,
+    boosts: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """The one scoring path under every query entry point.
+
+    ``queries``: {query_id: {term: qtf}} (empty qtfs are dropped).
+    Returns ``(query_id, doc_id, score)`` rows containing every true
+    top-k row of every query — per-shard top-k candidates; each front end
+    applies its own final merge.
+
+    ``filters``/``boosts``: optional per-query filter-context (B4:
+    membership only, never affects scores) / boost (B3: multiplicative
+    function-score applied AFTER BM25) tables.  Pushable tables ride the
+    kernel as a per-query allow-mask / multiplier array (top-k of the
+    filtered/boosted set directly, exact — at 100 TB a selective filter or
+    a small promotion table turns a score-everything pass into a top-k
+    pass); a query with an empty allow-mask has no rows and runs no
+    kernel.  The rest — oversized tables, and boost tables with duplicate
+    ids / zero / non-finite values, whose edge semantics belong to the
+    join — score every match and join (:func:`_fallback_topk`), unioned
+    in.  ``kernel`` only applies to a set of one query without boost
+    (:func:`_choose_kernel`)."""
+    queries = {qid: dict(q) for qid, q in queries.items() if q}
+    filters = {q: f for q, f in (filters or {}).items() if q in queries}
+    boosts = {q: b for q, b in (boosts or {}).items() if q in queries}
+    allows, boost_arrs, fallback = _prepare_pushdowns(filters, boosts)
+    pushed = {
+        qid: q for qid, q in queries.items()
+        if qid not in fallback and (qid not in allows or allows[qid].size)
+    }
+    parts = []
+    if pushed:
+        parts.append(
+            _score_set(handle, pushed, k, kernel, allows, boost_arrs)
+        )
+    fb = {qid: q for qid, q in queries.items() if qid in fallback}
+    if fb:
+        scored = _score_set(handle, fb, handle.meta["shard_size"])
+        parts.append(_fallback_topk(scored, sorted(fb), k, filters, boosts))
+    if not parts:
+        return handle.spark.createDataFrame([], _CANDIDATE_SCHEMA)
+    return reduce(DataFrame.unionByName, parts)
+
+
+def profile_query(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    k: int = 10,
+    handle: IndexHandle | None = None,
+) -> tuple[dict, DataFrame]:
+    """Kernel introspection for one query: what would the default search
+    path DO, and did block-max pruning fire?
+
+    Returns ``(decision, stats_df)``:
+
+    * ``decision`` — the driver-side adaptive-kernel choice
+      (:func:`_choose_kernel`, the same call the search path makes) with
+      its inputs: {kernel, n_candidates, threshold, k, terms: {term: df}}.
+    * ``stats_df`` — the pruned kernel run in profile mode: one row per
+      (gen, shard, term) with n_blocks / blocks_decoded / decode_mode
+      ('seed' = heaviest term, full decode; 'full' = >50% blocks alive so
+      cache-served full decode; 'selective' = block-skip fired) plus the
+      alive-doc count and theta at decision time.  The stats run IS the
+      real kernel (same closure, profile flag) — no simulation drift.
+
+    This is the tuning loop for tail queries: a hot multi-term query whose
+    rows all say decode_mode='full', alive_docs≈shard size has no skippable
+    work (raise theta seeding / reorder terms); one that says 'selective'
+    with small blocks_decoded is already pruned and its cost is elsewhere.
+    """
+    handle = handle or IndexHandle(spark, index_dir)
+    qtf = analyze_query(query_text, handle.meta["mode"])
+    decision = {"kernel": None, "n_candidates": 0,
+                "threshold": _PRUNE_RATIO * k, "k": k, "terms": {}}
+    if not qtf:
+        return decision, spark.createDataFrame([], _PROFILE_SCHEMA)
+    queries = {"q": dict(qtf)}
+    dfs = handle.global_dfs(qtf)
+    name, n_cand = _choose_kernel(queries, dfs, k)
+    decision.update(
+        kernel=name, n_candidates=int(n_cand),
+        terms={t: int(dfs[t]) for t in qtf},
+    )
+    kernel = _make_kernel("pruned", handle, queries, k, dfs, profile=True)
+    return decision, _apply_kernel(
+        handle, list(qtf), kernel, _PROFILE_SCHEMA,
+        _kernel_width(handle, "pruned", n_cand), empty_fn=_empty_profile,
+    )
+
+
+def search(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    k: int = 10,
+    include_meta: bool = False,
+    filter_doc_ids: DataFrame | None = None,
+    boost: DataFrame | None = None,
+    handle: IndexHandle | None = None,
+    kernel: str | None = None,
+) -> DataFrame:
+    """Top-k BM25. Returns DataFrame (doc_id, score [, repo/path/...]).
+
+    ``kernel``: None (default) picks adaptively by global df — 'pruned'
+    (vectorized block-max skip) once the candidate pool dwarfs k, else
+    'exhaustive' (decode-everything; rare-term queries never fill the heap
+    threshold, so skip bookkeeping is pure overhead there).  'wand_ref' is
+    the doc-at-a-time Python WAND, a test-only oracle (per-posting Python
+    — correct but never a production win; kept for its equivalence
+    property).  All kernels are rank-identical (equivalence-tested), so
+    the choice is cost-only; any other value raises ValueError.
+
+    ``filter_doc_ids``: optional (doc_id) DataFrame — exact filter context
+    (B4): membership only, never affects scores, applied before the limit.
+    ``boost``: optional (doc_id, _boost) DataFrame — multiplicative
+    function-score applied AFTER BM25, exact either way: a per-doc
+    multiplier can promote a doc past the unboosted per-shard heap cut, so
+    boosted scoring is never pruned (B3 on the segment path, reference:
+    backend/api/main.py:293-314).  How each is pushed into the kernel or
+    joined: :func:`_candidates`.
+    """
+    if kernel is not None and kernel not in _KERNELS:
+        raise ValueError(
+            f"kernel must be None or one of {sorted(_KERNELS)}, "
+            f"got {kernel!r}"
+        )
+    handle = handle or IndexHandle(spark, index_dir)
+    qtf = analyze_query(query_text, handle.meta["mode"])
+    if not qtf:
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+
+    def build() -> DataFrame:
+        return (
+            _candidates(
+                handle, {"q": qtf}, k, kernel,
+                filters=None if filter_doc_ids is None
+                else {"q": filter_doc_ids},
+                boosts=None if boost is None else {"q": boost},
+            )
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+        )
+
+    if filter_doc_ids is None and boost is None:
+        # Plan-skeleton cache (prepared-statement shape): a query service
+        # sees the same texts repeatedly, and rebuilding + re-analyzing
+        # the identical plan costs ~45 ms/query (build_df ~31 ms py4j +
+        # first-collect Catalyst work, scripts/probe_query_phases.py).
+        # Keyed on everything the plan closes over — (qtf, k, kernel);
+        # dfs/tombstones/meta are fixed per handle, and every index
+        # mutation replaces the handle.  Each collect on the cached
+        # DataFrame re-executes the plan against the live relations:
+        # plans are cached, results never.
+        topk = handle._cached_plan(
+            (tuple(sorted(qtf.items())), k, kernel), build
+        )
+    else:
+        topk = build()
+    return _with_meta(handle, topk, k) if include_meta else topk
+
+
+def _with_meta(handle: IndexHandle, topk: DataFrame, k: int) -> DataFrame:
+    dm = handle.doc_meta_df()
+    return (
+        dm.join(F.broadcast(topk), "doc_id")
+        .select("doc_id", "score", "repo", "path", "commit", "lang")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+    )
+
+
+def search_all(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    handle: IndexHandle | None = None,
+) -> DataFrame:
+    """Score ALL matching docs (no limit) — used for exact filtered search
+    and for oracle comparisons. Same kernels with k = shard_size."""
+    handle = handle or IndexHandle(spark, index_dir)
+    qtf = analyze_query(query_text, handle.meta["mode"])
+    if not qtf:
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    return _candidates(
+        handle, {"q": qtf}, handle.meta["shard_size"]
+    ).select("doc_id", "score")
 
 
 def search_many(
@@ -1498,42 +1376,27 @@ def search_many(
     Returns DataFrame (query_id, doc_id, score, rank), rank-identical per
     query to :func:`search`.  Postings are scanned once for the union of
     all query terms; per-shard work decodes each posting list once and
-    reuses the normalized tf vector across queries.
+    reuses the normalized tf vector across queries.  The global top-k
+    merge is one per-query Window rank.
 
     ``filters``/``boosts``: optional per-query filter-context / boost
     tables keyed by query_id (B4/B3 on the batch path — the filtered-eval
-    shape: 75 topics, each against its own cohort).  Pushable tables ride
-    the batch kernel (per-query allow-mask / multiplier array, exact);
-    queries whose tables exceed the push caps or carry join-defined edge
-    values are served by the exact single-query path and unioned back in."""
+    shape: 75 topics, each against its own cohort), same contract as
+    :func:`search`'s (see :func:`_candidates`)."""
     from pyspark.sql import Window
 
     handle = handle or IndexHandle(spark, index_dir)
-    allows, boost_arrs, fallback = _prepare_pushdowns(
-        filters or {}, boosts or {}
-    )
-    batch_q = {q: t for q, t in query_texts.items() if q not in fallback}
-    scored = _scored_many(
-        spark, index_dir, batch_q, k, handle, allows, boost_arrs
+    mode = handle.meta["mode"]
+    cands = _candidates(
+        handle,
+        {qid: analyze_query(t, mode) for qid, t in query_texts.items()},
+        k, filters=filters, boosts=boosts,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    if scored is None:
-        out = spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
-        )
-    else:
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-    fb = sorted(fallback & set(query_texts))
-    if fb:
-        fb_out = _fallback_topk_df(
-            spark, index_dir, fb, query_texts, k, handle, filters, boosts
-        )
-        if fb_out is not None:
-            out = out.unionByName(fb_out)
-    return out
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
 
 
 def search_many_rows(
@@ -1545,11 +1408,11 @@ def search_many_rows(
     filters: dict[str, DataFrame] | None = None,
     boosts: dict[str, DataFrame] | None = None,
 ) -> dict[str, list[tuple[int, float]]]:
-    """Serving-shape twin of :func:`search_many`: same single batch-kernel
-    job, but the global per-query top-k merge runs on the DRIVER over the
+    """Serving-shape twin of :func:`search_many`: same single kernel job,
+    but the global per-query top-k merge runs on the DRIVER over the
     collected per-shard candidates instead of a Window exchange.
 
-    The kernel output is bounded — ≤ k rows per (gen, shard, query) — so
+    The candidates are bounded — ≤ k rows per (gen, shard, query) — so
     the collect is ≤ n_shards · n_gens · n_queries · k tiny rows (the
     Lucene/OpenSearch coordinating-node merge shape: shards return their
     local top-k, the coordinator heap-merges).  Cutting the exchange +
@@ -1561,40 +1424,21 @@ def search_many_rows(
     ``filters``/``boosts``: per-query pushdowns, same contract as
     :func:`search_many`."""
     handle = handle or IndexHandle(spark, index_dir)
-    allows, boost_arrs, fallback = _prepare_pushdowns(
-        filters or {}, boosts or {}
+    mode = handle.meta["mode"]
+    cands = _candidates(
+        handle,
+        {qid: analyze_query(t, mode) for qid, t in query_texts.items()},
+        k, filters=filters, boosts=boosts,
     )
-    out: dict[str, list[tuple[int, float]]] = {q: [] for q in query_texts}
-    fb = sorted(fallback & set(query_texts))
-    if fb:
-        # one distributed job for the whole fallback set (not Q serial
-        # jobs); its output is already per-query top-k, so the collect
-        # stays bounded at |fb| * k rows
-        fb_df = _fallback_topk_df(
-            spark, index_dir, fb, query_texts, k, handle, filters, boosts
-        )
-        if fb_df is not None:
-            fb_pdf = (
-                fb_df.select("query_id", "doc_id", "score", "rank")
-                .toArrow().to_pandas()
-                .sort_values(["query_id", "rank"])
-            )
-            for qid, doc_id, score, _rank in fb_pdf.itertuples(index=False):
-                out[qid].append((int(doc_id), float(score)))
-    batch_q = {q: t for q, t in query_texts.items() if q not in fallback}
-    scored = _scored_many(
-        spark, index_dir, batch_q, k, handle, allows, boost_arrs
-    )
-    if scored is None:
-        return out
     # Arrow collect + one vectorized sort: at Q queries the candidate set
     # is Q · n_shards · k rows — per-Row python objects would put a
     # Q-linear serial term right back on the driver.
-    pdf = scored.toArrow().to_pandas()
+    pdf = cands.toArrow().to_pandas()
     pdf = pdf.sort_values(
         ["query_id", "score", "doc_id"], ascending=[True, False, True],
         kind="mergesort",
     ).groupby("query_id", sort=False).head(k)
+    out: dict[str, list[tuple[int, float]]] = {q: [] for q in query_texts}
     for qid, doc_id, score in pdf.itertuples(index=False):
         out[qid].append((int(doc_id), float(score)))
     return out

@@ -14,10 +14,12 @@ reference: backend/evaluation/evaluation_pipeline.py:122-150): concurrent
 callers enqueue requests, a single dispatcher thread drains WHATEVER is
 queued (adaptive batch size: under light load a batch of 1 leaves
 latency untouched; under heavy load batches grow to `max_batch` and the
-per-job driver cost amortizes across the batch) and runs ONE
-`search_many` job for the whole batch.  `search_many` is rank-identical
-per query to `search` (same kernels, same (score desc, doc_id asc)
-tie-break), so batching changes throughput, never results.
+per-job driver cost amortizes across the batch).  A batch of several
+distinct requests runs ONE `search_many_rows` job (query-set kernel,
+driver-side top-k merge); a batch of one distinct request runs `search`
+(one cached plan, one job).  Both score through the same query-set path
+and the same (score desc, doc_id asc) tie-break, so batching changes
+throughput, never results.
 
 Scale note (100 TB / 1000 executors): one batched job scans the postings
 once for the UNION of all batched query terms and decodes each posting
@@ -56,7 +58,7 @@ class BatchingSearchServer:
                   batches run on concurrent pool threads, so the handle
                   must exist before any of them race to build it.
     max_batch:    cap on queries folded into one Spark job.  Keeps the
-                  batch kernel's per-task score-vector working set
+                  query-set kernel's per-task score-vector working set
                   bounded (one float64 vector per query per shard).
     max_wait_ms:  how long the dispatcher lingers after draining the
                   queue to let stragglers join the batch.  0 (default)
@@ -193,8 +195,8 @@ class BatchingSearchServer:
         for r in batch:
             uniq.setdefault((r.text, r.k), []).append(r)
         if len(uniq) == 1:
-            # singleton batch: the per-query path is one plan, one job —
-            # strictly cheaper than search_many + window rank
+            # singleton batch: the per-query path is one cached plan, one
+            # job — cheaper than building a search_many_rows plan
             (text, k), reqs = next(iter(uniq.items()))
             rows = self.engine.search_topk_rows(text, k=k)
             for r in reqs:

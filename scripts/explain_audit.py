@@ -163,7 +163,7 @@ def main() -> None:
         "shard) and the norms ride a driver broadcast, so the query is a "
         "SINGLE-INPUT python stage: cached scan -> term filter -> one "
         "explicit kernel-width repartition (REPARTITION_BY_NUM of the "
-        "tiny term-pruned rows; width 1 for cache-light queries, 4x the "
+        "tiny term-pruned rows; width 1 for cache-light query sets, the "
         "group count for heavy ones) -> FlatMapGroupsInPandas -> "
         "TakeOrderedAndProject.  No cogroup, no norms scan, no per-query "
         "norm bytes across the JVM/Python boundary.",

@@ -1,7 +1,7 @@
 """spark-submit entry point: run BM25 top-k queries against a built index.
 
     spark-submit --py-files ctse.zip scripts/submit_search.py \
-        --index-dir /path/to/index --k 10 [--wand] [--meta] \
+        --index-dir /path/to/index --k 10 [--kernel pruned] [--meta] \
         "merge join filter" ["second query" ...]
 
 Prints one JSON line per query: {"query": ..., "seconds": ...,
@@ -24,8 +24,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--wand", action="store_true",
-                    help="block-max WAND kernel (default: vectorized exhaustive)")
+    ap.add_argument("--kernel", choices=["exhaustive", "pruned", "wand_ref"],
+                    default=None,
+                    help="scoring kernel (default: chosen per query by df)")
     ap.add_argument("--meta", action="store_true",
                     help="join repo/path/commit onto the hits")
     ap.add_argument("--no-warm", action="store_true",
@@ -43,7 +44,7 @@ def main() -> None:
         eng.warm(postings=True)
     for q in args.queries:
         t0 = time.time()
-        df = eng.search(q, k=args.k, use_wand=args.wand,
+        df = eng.search(q, k=args.k, kernel=args.kernel,
                         include_meta=args.meta)
         rows = df.collect()
         out = {

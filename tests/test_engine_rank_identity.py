@@ -39,15 +39,17 @@ def test_rank_identity_standard(built_index, oracle_standard):
 
 
 def test_rank_identity_wand(built_index, oracle_standard):
-    """B6 equivalence, both halves: the demoted doc-at-a-time Python WAND
-    ('wand_ref', test-only oracle) AND the public use_wand surface (now an
-    alias of the vectorized pruned kernel) == oracle."""
+    """B6 equivalence: the demoted doc-at-a-time Python WAND ('wand_ref',
+    test-only oracle) == oracle."""
     for q in reference_queries():
         exp = oracle_standard.search(q["text"], q["k"])
         got = built_index.search_topk_rows(q["text"], q["k"], kernel="wand_ref")
         _assert_rank_identical(exp, got, q["query_id"])
-        got2 = built_index.search_topk_rows(q["text"], q["k"], use_wand=True)
-        _assert_rank_identical(exp, got2, q["query_id"] + "/alias")
+
+
+def test_unknown_kernel_raises(built_index):
+    with pytest.raises(ValueError, match="exhaustive.*pruned.*wand_ref"):
+        built_index.search("def license", 10, kernel="bogus")
 
 
 def test_rank_identity_pruned(built_index, oracle_standard):
@@ -58,6 +60,103 @@ def test_rank_identity_pruned(built_index, oracle_standard):
         exp = oracle_standard.search(q["text"], q["k"])
         got = built_index.search_topk_rows(q["text"], q["k"], kernel="pruned")
         _assert_rank_identical(exp, got, q["query_id"])
+
+
+@pytest.mark.parametrize(
+    "shape", ["cold", "warm_broadcast", "warm_cogroup", "df_lookup"]
+)
+def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
+    """Every norms shape of the kernel plan (_apply_kernel) and both
+    df-lookup modes: search (default and pruned), search_many and
+    search_many_rows == oracle.  warm_cogroup forces the norms preload cap
+    down so the warmed cogroup plan runs; df_lookup forces the term
+    dictionary preload cap down so dfs come from per-query lookups."""
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+
+    eng = SearchEngine(spark, built_index.index_dir)
+    handle = eng.handle()
+    if shape == "warm_broadcast":
+        handle.warm(postings=True)
+    elif shape == "warm_cogroup":
+        handle.warm(postings=True, preload_norms_docs_cap=0)
+    elif shape == "df_lookup":
+        handle.warm(postings=True, preload_terms_cap=0)
+    assert (handle._norms_bcast is not None) == (
+        shape in ("warm_broadcast", "df_lookup")
+    )
+    assert handle._df_preloaded == (shape in ("warm_broadcast", "warm_cogroup"))
+    try:
+        qs = reference_queries()
+        exp = {q["query_id"]: oracle_standard.search(q["text"], q["k"])
+               for q in qs}
+        for q in qs:
+            qid = q["query_id"]
+            for kernel in (None, "pruned"):
+                got = eng.search_topk_rows(q["text"], q["k"], kernel=kernel)
+                _assert_rank_identical(exp[qid], got, f"{shape}/{qid}/{kernel}")
+        texts = {q["query_id"]: q["text"] for q in qs}
+        kmax = max(q["k"] for q in qs)
+        rows = eng.search_many_rows(texts, k=kmax)
+        batch: dict = {qid: [] for qid in texts}
+        for r in eng.search_many(texts, k=kmax).collect():
+            batch[r["query_id"]].append((r["rank"], r["doc_id"], r["score"]))
+        for q in qs:
+            qid, k = q["query_id"], q["k"]
+            _assert_rank_identical(exp[qid], rows[qid][:k], f"{shape}/rows/{qid}")
+            many = [(d, s) for _, d, s in sorted(batch[qid])][:k]
+            _assert_rank_identical(exp[qid], many, f"{shape}/many/{qid}")
+    finally:
+        handle.close()
+
+
+def test_plan_cache_is_lru(spark, built_index, monkeypatch):
+    """search()'s plan cache evicts the least recently used plan: with
+    room for two, a plan used again survives a third insert."""
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+    from clinical_trial_searchengine_spark.plans import query as q
+
+    monkeypatch.setattr(q, "_PLAN_CACHE_CAP", 2)
+    eng = SearchEngine(spark, built_index.index_dir)
+    a = eng.search("def license", 10)
+    b = eng.search("the import", 10)
+    assert eng.search("def license", 10) is a  # hit: now most recent
+    eng.search("return def", 10)  # third plan evicts "the import"
+    assert len(eng.handle()._plan_cache) == 2
+    assert eng.search("def license", 10) is a
+    assert eng.search("the import", 10) is not b
+
+
+def test_plan_cache_concurrent_use(spark, built_index, monkeypatch):
+    """Serving threads share one handle: concurrent hits, inserts and
+    evictions never raise, never return another key's plan, and keep the
+    cache within its cap."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+    from clinical_trial_searchengine_spark.plans import query as q
+
+    # 3 keys over room for 2: nearly every call evicts, so a hit's
+    # check-then-move races an eviction unless the map updates are locked
+    monkeypatch.setattr(q, "_PLAN_CACHE_CAP", 2)
+    handle = SearchEngine(spark, built_index.index_dir).handle()
+
+    def work(seed):
+        for i in range(5000):
+            key = (seed + i) % 3
+            assert handle._cached_plan(key, lambda: ("plan", key)) == (
+                "plan", key,
+            )
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            for f in [ex.submit(work, s) for s in range(16)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(handle._plan_cache) <= 2
 
 
 def test_rank_identity_porter(built_index_porter, oracle_porter):
@@ -148,19 +247,15 @@ def test_filter_pushdown_matches_fallback(built_index, spark, monkeypatch):
 
     # every kernel honors the allow-mask identically (wand_ref is the
     # test-only oracle; pruned/exhaustive are the production pair)
-    import numpy as np
-
     handle = built_index.handle()
-    allow_arr = np.unique(
-        np.array([r["doc_id"] for r in allowed.collect()], dtype=np.int64)
-    )
     qtf = q.analyze_query("def license", handle.meta["mode"])
     per_kernel = [
         sorted(
             [
                 (r["doc_id"], r["score"])
-                for r in q._scored_df(
-                    handle, qtf, 10, False, kernel_name=kn, allow=allow_arr
+                for r in q._candidates(
+                    handle, {"q": qtf}, 10, kernel=kn,
+                    filters={"q": allowed},
                 ).collect()
             ],
             key=lambda t: (-t[1], t[0]),
@@ -280,13 +375,9 @@ def test_multifield_engine_matches_dataframe_path(
     ]
 
 
-def test_search_many_matches_per_query(built_index):
+def test_search_many_matches_per_query(built_index, oracle_standard):
     """Batch execution (one job for the whole query set) must be
-    rank-identical per query to individual search() calls."""
-    from clinical_trial_searchengine_spark.sources.corpus import (
-        reference_queries,
-    )
-
+    rank-identical per query to the oracle."""
     qs = {q["query_id"]: q["text"] for q in reference_queries()[:8]}
     batch = built_index.search_many(qs, k=10).collect()
     got = {}
@@ -295,9 +386,10 @@ def test_search_many_matches_per_query(built_index):
             (r["rank"], r["doc_id"], r["score"])
         )
     for qid, text in qs.items():
-        single = built_index.search_topk_rows(text, k=10)
         rows = sorted(got.get(qid, []))
-        assert [(d, s) for _, d, s in rows] == single, qid
+        _assert_rank_identical(
+            oracle_standard.search(text, 10), [(d, s) for _, d, s in rows], qid
+        )
 
 
 def test_search_many_per_query_filters_and_boosts(
@@ -365,7 +457,7 @@ def test_search_many_fallback_is_one_job_not_a_search_loop(
     """Round-4 verdict #3: oversized-table queries used to be served one
     search() Spark job each in a driver loop.  Force every query into
     fallback and assert the batch paths never call search() at all —
-    the whole fallback set rides one _scored_many job."""
+    the whole fallback set rides one kernel job."""
     from pyspark.sql import functions as F
     from clinical_trial_searchengine_spark.plans import query as q
     from clinical_trial_searchengine_spark.plans import segments as seg

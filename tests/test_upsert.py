@@ -109,6 +109,37 @@ def test_upsert_kernels_rank_identical(spark, upserted):
             assert got == ref, (q, kernel)
 
 
+def test_doc_meta_tombstone_mask_is_anti_join(spark, upserted, monkeypatch):
+    """doc_meta masks tombstones with a broadcast left-anti join — the plan
+    does not inline the tombstone ids as an IN list — and include_meta
+    rows equal those of the IN-list mask."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pyspark.sql import functions as F
+
+    eng, *_ = upserted
+    handle = eng.handle()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        handle.doc_meta_df().explain(mode="formatted")
+    plan = buf.getvalue()
+    assert "LeftAnti" in plan
+    assert "InSet" not in plan and " IN (" not in plan, plan
+
+    tomb = [int(x) for x in handle.tombstones]
+    for q in ["def license", "zzzupserted marker"]:
+        got = eng.search(q, 10, include_meta=True).collect()
+        assert got and not any(r["doc_id"] in tomb for r in got)
+        with monkeypatch.context() as m:
+            m.setattr(
+                handle, "_drop_tombstoned",
+                lambda df: df.where(~F.col("doc_id").isin(tomb)),
+            )
+            exp = eng.search(q, 10, include_meta=True).collect()
+        assert got == exp, q
+
+
 def test_compaction_restores_exact_scores(spark, upserted):
     eng, full, upd, cur, out, tmp = upserted
     d_ref = tmp + "/ref"
