@@ -16,14 +16,3 @@ via TakeOrderedAndProject.
 """
 
 __version__ = "0.1.0"
-
-# Per-task importlib.invalidate_caches() re-reads every sys.path zip TOC on
-# CPython 3.11 — ~140 ms of worker CPU per task (see workerenv docstring).
-# Installing the 3.12-semantics guard here puts it in every Python worker
-# that runs this package's kernels (workers import the package to unpickle
-# them) as well as the driver.
-from clinical_trial_searchengine_spark.workerenv import (  # noqa: E402
-    install_zipimport_guard,
-)
-
-install_zipimport_guard()

@@ -146,16 +146,16 @@ class SearchEngine:
             handle=self.handle(), **kwargs,
         )
 
-    def serving(self, **kwargs):
-        """A thread-safe :class:`BatchingSearchServer` over this engine —
-        the concurrent-load surface (adaptive micro-batching amortizes the
-        per-query driver cost across whatever concurrency queues up).
-        Call :meth:`warm` first."""
-        from clinical_trial_searchengine_spark.serving import (
-            BatchingSearchServer,
-        )
+    def serving(self):
+        """A thread-safe :class:`SearchServer` over this engine — the
+        concurrent-load surface: each request runs one plan-cached
+        :meth:`search` on a pool as wide as the driver's CPUs, and
+        identical in-flight requests share one search.  For a known query
+        set use :meth:`search_many_rows` (one job).  Call :meth:`warm`
+        first."""
+        from clinical_trial_searchengine_spark.serving import SearchServer
 
-        return BatchingSearchServer(self, **kwargs)
+        return SearchServer(self)
 
     def search_topk_rows(self, query_text: str, k: int = 10, **kwargs):
         """Driver-side list[(doc_id, score)] — convenience for tests/bench."""

@@ -5,58 +5,31 @@ which ends with ``importlib.invalidate_caches()``; on CPython 3.11 each
 zipimporter in ``sys.path_importer_cache`` then re-reads its archive's
 whole table of contents (pyspark.zip, the py4j src zip and the spark-core
 JAR — 16 cached importer instances here), ~140 ms of worker CPU per call.
-The package ``__init__`` installs an (mtime_ns, size) guard — CPython
-3.12's native semantics — but only in workers that import this package
-(i.e. run its kernels).  Plain pickled-RDD workers (``createDataFrame``
-from Python rows, ``parallelize``) never do, and a 1-row
+Plain pickled-RDD workers (``createDataFrame`` from Python rows,
+``parallelize``) pay it as much as the engine's kernels do: a 1-row
 ``createDataFrame(...).write.parquet(...)`` was measured at 4+ seconds of
 worker CPU spent exclusively in ``zipimport._read_directory``
 (fork-following in-worker sampler; see OPTIMIZATION_r06.md).
 
-Because every worker is forked from the daemon, patching once at daemon
-start covers them all.  This module is self-contained (no package import:
-it must work even when only the repo root is on PYTHONPATH) and then
-hands over to the stock ``pyspark.daemon`` with argv intact.  Enabled by
-``session.get_spark`` via ``spark.python.daemon.module``; sessions built
-without it just keep the stock daemon (slower, never wrong).
+Every worker is forked from the daemon, so running this module installs
+``workerenv.install_zipimport_guard`` — the (mtime_ns, size) guard,
+CPython 3.12's native semantics — once at daemon start, which covers them
+all, and then hands over to the stock ``pyspark.daemon`` with argv intact.
+Importing it imports the package (whose ``__init__`` patches nothing), so
+the package root must be on the daemon's PYTHONPATH; ``session.get_spark``
+puts it there for local masters and enables this module via
+``spark.python.daemon.module``.  Sessions built without it keep the stock
+daemon (slower, never wrong).
 """
 
 from __future__ import annotations
 
-import os
-import sys
-import zipimport
-
-
-def _install_zipimport_guard() -> None:
-    if sys.version_info >= (3, 12):
-        return  # native guard exists
-    cls = zipimport.zipimporter
-    if getattr(cls, "_ctse_zipimport_guard", False):
-        return
-    orig = cls.invalidate_caches
-
-    def invalidate_caches(self):  # noqa: ANN001 - stdlib signature
-        try:
-            st = os.stat(self.archive)
-            key = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            return orig(self)
-        if getattr(self, "_ctse_zip_key", None) == key:
-            return None
-        out = orig(self)
-        self._ctse_zip_key = key
-        return out
-
-    invalidate_caches.__doc__ = orig.__doc__
-    cls.invalidate_caches = invalidate_caches
-    cls._ctse_zipimport_guard = True
-
-
-_install_zipimport_guard()
+from clinical_trial_searchengine_spark.workerenv import install_zipimport_guard
 
 if __name__ == "__main__":
     import runpy
+
+    install_zipimport_guard()
 
     # run the stock daemon exactly as `python -m pyspark.daemon <args>`
     # would; sys.argv[1:] (the worker module) passes through untouched

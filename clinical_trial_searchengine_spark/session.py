@@ -76,8 +76,8 @@ def get_spark(
         # there the PYTHONPATH prepend above provably reaches the
         # daemon.  Cluster deployments that ship this package to the
         # executors (--py-files / pip) can set the same conf via
-        # extra_conf; package-kernel workers get the guard from the
-        # package __init__ either way.
+        # extra_conf; without it their workers run unguarded (slower,
+        # never wrong) — importing the package patches nothing.
         builder = builder.config(
             "spark.python.daemon.module",
             "clinical_trial_searchengine_spark.fastdaemon",

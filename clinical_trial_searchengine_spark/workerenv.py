@@ -28,12 +28,14 @@ changes or the stat fails.  Semantics are unchanged for every supported
 case — a zip that is modified mid-run is still picked up — only the
 pathological re-read-per-task disappears.
 
-Installation is one line in the package ``__init__``: any Python worker
-that unpickles one of this package's kernels imports the package, so the
-guard lands in each worker process the first time it runs engine code and
-every subsequent task in that worker (Spark reuses workers by default) is
-fast.  Driver-side import is harmless for the same reason.  On CPython
->= 3.12 the native guard already exists and this wrapper is skipped.
+Installation happens once per Python daemon: ``fastdaemon`` (the
+``spark.python.daemon.module`` that ``session.get_spark`` sets for local
+masters) calls :func:`install_zipimport_guard` before handing over to the
+stock daemon, and every worker forks from it already patched.  Importing
+the package installs nothing, so an application that embeds the library
+keeps its interpreter untouched; a cluster deployment opts in by setting
+the same daemon conf.  On CPython >= 3.12 the native guard already exists
+and this wrapper is skipped.
 """
 
 from __future__ import annotations

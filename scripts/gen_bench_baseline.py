@@ -314,18 +314,18 @@ def main() -> None:
         if bt:
             ql, qh = bt
             hdr()
-            w(f"* **Micro-batched serving** (BatchingSearchServer folds the "
-              f"queued requests into one search_many job, same offered "
-              f"load): {ql['qps']} -> {qh['qps']} q/s (p50 {ql['p50_sec']}s "
-              f"-> {qh['p50_sec']}s).  Batching amortizes the per-job fixed "
-              f"cost, so ABSOLUTE throughput beats per-query serving at "
-              f"both levels"
-              + (f" ({ql['qps'] / pq[0]['qps']:.1f}x / "
-                 f"{qh['qps'] / pq[1]['qps']:.1f}x)" if pq else "")
-              + "; at this sandbox corpus size the batched cell is "
+            w(f"* **Served** (`engine.serving()`: each request runs one "
+              f"plan-cached search on a driver-CPU-wide pool, identical "
+              f"in-flight requests share one search; same offered load): "
+              f"{ql['qps']} -> {qh['qps']} q/s (p50 {ql['p50_sec']}s -> "
+              f"{qh['p50_sec']}s)"
+              + (f", {ql['qps'] / pq[0]['qps']:.1f}x / "
+                 f"{qh['qps'] / pq[1]['qps']:.1f}x the per-query cell"
+                 if pq else "")
+              + "; at this sandbox corpus size the served cell is "
                 "fixed-cost-bound, so its 1-vs-4 ratio measures the "
                 "driver, not the cluster — the marginal cells below are "
-                "the scaling estimator for this shape.")
+                "the scaling estimator for the query-set shape.")
         mg = qpair("marginal", 1_000_000)
         if mg:
             ql, qh = mg

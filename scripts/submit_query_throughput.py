@@ -36,9 +36,11 @@ def main() -> None:
                     help="repetitions of the 20-query reference set")
     ap.add_argument("--serving", choices=("per_query", "batched"),
                     default="per_query",
-                    help="per_query: one Spark job per search call; "
-                    "batched: BatchingSearchServer micro-batches whatever "
-                    "the driver threads queue into one search_many job")
+                    help="per_query: the driver threads call search "
+                    "directly; batched: they go through engine.serving() "
+                    "(one plan-cached search per request on a pool of "
+                    "driver-CPU width, identical in-flight requests "
+                    "shared; the name is kept for cluster_scaling.py)")
     ap.add_argument("--mode", choices=("concurrent", "marginal"),
                     default="concurrent",
                     help="concurrent: driver-thread pool fires queries "
@@ -95,7 +97,7 @@ def main() -> None:
         eng.search_topk_rows(q["text"], k=q["k"])
 
     server = eng.serving() if args.serving == "batched" else None
-    if server is not None:  # warm the batch-kernel path too
+    if server is not None:  # one untimed pass through the server
         from concurrent.futures import wait
         wait([server.submit(q["text"], q["k"]) for q in qs])
 

@@ -52,6 +52,38 @@ def test_bm25_multifield_matches_oracle(docs):
     pd.testing.assert_frame_equal(got, exp)
 
 
+# 31 corpus terms (the whole sf0.01 vocabulary) + 9 no-hit terms, mixed qtf
+_WIDE_TERMS = {
+    **{t: 1.0 + (i % 3) for i, t in enumerate(
+        "join hash row batch scan customer column filter small slow merge "
+        "order vector line data table agg value key stream window spark a "
+        "group part big sort query fast the dup".split())},
+    **{f"zzznohit{i}": 1.0 for i in range(9)},
+}
+
+
+@pytest.mark.parametrize("terms, cap", [
+    pytest.param(_WIDE_TERMS, None, id="wide-default_cap"),
+    pytest.param({"merge": 1.0, "join": 1.0, "filter": 1.0}, 0,
+                 id="narrow-cap0"),
+])
+def test_bm25_join_plan_matches_oracle(docs, monkeypatch, terms, cap):
+    """The join plan (query wider than the one-pass cap) equals DuckDB."""
+    from clinical_trial_searchengine_spark.plans import dataframe_bm25
+    from clinical_trial_searchengine_spark.plans.dataframe_bm25 import (
+        bm25_oracle_sql,
+        bm25_topk,
+    )
+
+    if cap is not None:
+        monkeypatch.setattr(dataframe_bm25, "_ONEPASS_MAX_TERMS", cap)
+    assert len(terms) > dataframe_bm25._ONEPASS_MAX_TERMS
+    got = _norm(bm25_topk(docs, terms, k=10).toPandas())
+    exp = _norm(_duck(bm25_oracle_sql(terms, k=10)))
+    assert len(exp) == 10
+    pd.testing.assert_frame_equal(got, exp)
+
+
 def test_bm25_multifield_beats_single_field_for_prefix_hits(docs):
     """A doc whose match sits in the boosted prefix field must outrank an
     identical-tf body-only match (dis_max semantics)."""
