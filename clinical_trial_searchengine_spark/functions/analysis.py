@@ -282,72 +282,6 @@ def _stem_cached(t: str) -> str:
     return s
 
 
-def analyze_flat(texts: pd.Series, mode: str = "standard"):
-    """Whole-batch flat analyzer: no per-document Python loop.
-
-    Returns ``(doc_idx, term_strings, tfs, doc_lens)`` where the first three
-    are parallel arrays of per-(doc, distinct-term) rows, term-sorted within
-    each doc, and ``doc_lens`` is the per-input-row POST-filter token count.
-    Semantically identical to :func:`analyze_batch` (property: same
-    (term, tf) pairs in the same order) but vectorized end-to-end:
-    one factorize over the batch's token stream, one int lexsort, one
-    run-length encode — this is the hot path of the index build.
-    """
-    import itertools
-
-    import numpy as np
-
-    if mode not in ("standard", "porter"):
-        raise ValueError(f"unknown analyzer mode: {mode}")
-    token_lists = texts.fillna("").str.lower().str.findall(_TOKEN_RE)
-    counts = np.fromiter(
-        (len(t) for t in token_lists), dtype=np.int64, count=len(token_lists)
-    )
-    doc_idx = np.repeat(np.arange(len(token_lists), dtype=np.int64), counts)
-    flat = list(itertools.chain.from_iterable(token_lists))
-    if not flat:
-        z = np.zeros(0, dtype=np.int64)
-        return z, np.asarray([], dtype=object), z, np.zeros(len(texts), np.int64)
-    codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
-
-    if mode == "porter":
-        mapped = [
-            None if t in STOPWORDS else _stem_cached(t) for t in uniques
-        ]
-        keep_unique = np.asarray([m is not None for m in mapped])
-        keep = keep_unique[codes]
-        codes, doc_idx = codes[keep], doc_idx[keep]
-        stems = np.asarray(
-            [m if m is not None else "" for m in mapped], dtype=object
-        )
-        # re-factorize over stems so distinct tokens sharing a root merge
-        stem_codes, stem_uniques = pd.factorize(stems[codes])
-        codes, uniques = stem_codes, stem_uniques
-
-    # term-sorted order within doc == oracle's sorted(Counter(...)) order
-    sorter = np.argsort(uniques.astype("U"), kind="stable")
-    rank = np.empty(len(uniques), dtype=np.int64)
-    rank[sorter] = np.arange(len(uniques))
-    ranked = rank[codes]
-    order = np.lexsort((ranked, doc_idx))
-    doc_idx, ranked = doc_idx[order], ranked[order]
-    # run-length encode (doc_idx, ranked) pairs -> tf
-    if len(doc_idx):
-        new = np.concatenate(
-            ([True], (doc_idx[1:] != doc_idx[:-1]) | (ranked[1:] != ranked[:-1]))
-        )
-        starts = np.flatnonzero(new)
-        tfs = np.diff(np.concatenate((starts, [len(doc_idx)])))
-        out_doc = doc_idx[starts]
-        out_terms = np.asarray(uniques, dtype=object)[sorter][ranked[starts]]
-    else:
-        out_doc = np.zeros(0, dtype=np.int64)
-        out_terms = np.asarray([], dtype=object)
-        tfs = np.zeros(0, dtype=np.int64)
-    doc_lens = np.bincount(doc_idx, minlength=len(texts)).astype(np.int64)
-    return out_doc, out_terms, tfs, doc_lens
-
-
 # Byte LUTs for the ASCII fast path: one gather lowers A-Z, one classifies
 # [a-z0-9].  Bytes >= 0x80 (multibyte UTF-8) classify as separators, which is
 # only correct when no non-ASCII char lowercases INTO the token charset (e.g.
@@ -450,25 +384,25 @@ def _tokenize_ascii_bytes(strings):
 
 
 def analyze_flat_arrow(strings, mode: str = "standard"):
-    """Arrow-native flat analyzer: the bandwidth-light twin of
-    :func:`analyze_flat` for the index-build hot path.
+    """Arrow-native flat analyzer: the index-build hot path.
 
-    Tokenization and vocabulary building run as vectorized byte/LUT passes
+    Same (term, tf) pairs in the same order and the same POST-filter
+    ``doc_lens`` as :func:`analyze_batch` (property-tested), but
+    tokenization and vocabulary building run as vectorized byte/LUT passes
     (all-ASCII batches — the hot case) or Arrow C++ kernels (Unicode
     fallback: utf8_lower + RE2 split) — NO per-token Python object is ever
-    materialized (``analyze_flat`` pays one PyObject str per token via
-    ``str.findall``; at millions of tokens per batch that allocation traffic
-    is pure memory-bandwidth waste, the dominant shared-socket scaling
-    cost).  Python touches only vocabulary-sized data (the Porter stem map)
-    and fixed-width numpy arrays; the (doc, term) grouping is a single radix
+    materialized (``str.findall`` pays one PyObject str per token; at
+    millions of tokens per batch that allocation traffic is pure
+    memory-bandwidth waste, the dominant shared-socket scaling cost).
+    Python touches only vocabulary-sized data (the Porter stem map) and
+    fixed-width numpy arrays; the (doc, term) grouping is a single radix
     sort on a composite int key.
 
     Input: a ``pyarrow`` StringArray (nulls allowed).  Returns
     ``(row_idx, dict_idx, dictionary, tfs, doc_lens)`` where ``dictionary``
     is a pyarrow StringArray and ``dict_idx`` indexes it per output
-    (doc, distinct term) row, term-sorted within each doc —
-    ``pc.take(dictionary, dict_idx)`` yields exactly
-    :func:`analyze_flat`'s term column (property-tested).
+    (doc, distinct term) row, term-sorted within each doc, so
+    ``pc.take(dictionary, dict_idx)`` is the term column.
     """
     import numpy as np
     import pyarrow as pa
@@ -604,13 +538,3 @@ def make_analyze_udf(mode: str = "standard"):
         )
 
     return _analyze
-
-
-def make_tokens_udf(mode: str = "standard"):
-    """content -> array<string> of analyzed tokens (order-preserving)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(texts: pd.Series) -> pd.Series:
-        return pd.Series([tokenize_text(t, mode) for t in texts])
-
-    return _tok

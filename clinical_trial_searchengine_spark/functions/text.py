@@ -1,5 +1,5 @@
 """Text-analysis operators for large-scale training-data pipelines:
-language-ID, quality scoring, token counting, document fingerprinting.
+language-ID, quality features, token counting, document fingerprinting.
 
 All hot-path expressions are built-in pyspark.sql.functions (JVM-side,
 whole-stage-codegen); only language-ID uses a (vectorized) pandas UDF.
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 # ---------------------------------------------------------------------------
-# Token counting (whitespace + BPE-ish regex)
+# Token counting (whitespace + analyzer regex)
 # ---------------------------------------------------------------------------
 
 
@@ -28,17 +28,8 @@ def word_token_count(col: str) -> Column:
     return F.size(F.expr(f"regexp_extract_all(lower({col}), '[a-z0-9]+', 0)"))
 
 
-def bpe_ish_token_count(col: str) -> Column:
-    """BPE-ish subword proxy: word tokens + digit runs + punctuation marks,
-    approximating a subword tokenizer's length for budget estimation."""
-    return (
-        F.size(F.expr(f"regexp_extract_all(lower({col}), '[a-z]+|[0-9]', 0)"))
-        + F.size(F.expr(f"regexp_extract_all({col}, '[^a-zA-Z0-9\\\\s]', 0)"))
-    )
-
-
 # ---------------------------------------------------------------------------
-# Quality scoring (length / punctuation / stopword ratios)
+# Quality features (length / punctuation / stopword ratios)
 # ---------------------------------------------------------------------------
 
 _STOPWORD_SQL_LIST = (
@@ -72,16 +63,6 @@ def quality_features(text_col: str = "text"):
             (n_chars - n_words + 1) / F.greatest(n_words, F.lit(1)), 6
         ),
     }
-
-
-def quality_score(text_col: str = "text") -> Column:
-    """Composite [0,1] quality score: penalize too-short/too-long docs,
-    missing stopwords (non-prose), and punctuation floods."""
-    f = quality_features(text_col)
-    len_ok = F.when((f["n_words"] >= 10) & (f["n_words"] <= 100000), 1.0).otherwise(0.3)
-    stop_ok = F.when(f["stopword_ratio"] >= 0.01, 1.0).otherwise(0.6)
-    punct_ok = F.when(f["punct_ratio"] <= 0.2, 1.0).otherwise(0.5)
-    return F.round(len_ok * stop_ok * punct_ok, 6)
 
 
 # ---------------------------------------------------------------------------

@@ -44,18 +44,6 @@ def exact_duplicates(
     )
 
 
-def dedup_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Return df with exact duplicates removed (keep min-id per content)."""
-    w_keep = (
-        df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("_h"))
-        .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return df.join(w_keep.select(id_col), id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # Shingles (shared)
 # ---------------------------------------------------------------------------

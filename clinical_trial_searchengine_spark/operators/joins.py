@@ -1,42 +1,16 @@
 """Join shapes from the reference, Spark-first (SURVEY.md §2.3).
 
-J1: parent-children denormalization — the reference does N+1 point lookups
-per trial (reference: backend/search/reindex_from_postgres.py:68-109,
-184-205); here it's one pre-aggregated shuffle join.
 J2: top-k ids -> doc fetch as a broadcast semi-join
-(reference: backend/api/main.py:848-867).
+(reference: backend/api/main.py:848-867).  J1, the parent-children
+denormalization that replaces the reference's N+1 point lookups, is one
+pre-aggregated join written inline in the ``denorm_children`` gate
+(``__spark_entry__.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def denormalize_children(
-    parent: DataFrame,
-    child: DataFrame,
-    key: str,
-    child_struct_cols: list[str],
-    order_col: str | None = None,
-    out_col: str = "children",
-) -> DataFrame:
-    """parent LEFT JOIN (child grouped to an ordered array of structs).
-
-    The child side is aggregated BEFORE the join (collect_list over
-    groupBy), so the join is 1:1 — no row explosion, and AQE can pick a
-    broadcast if the aggregated side is small.  Ordering uses array_sort on a
-    leading order column (T5: the reference orders criteria by sequence_no).
-    """
-    struct_cols = ([order_col] if order_col else []) + [
-        c for c in child_struct_cols if c != order_col
-    ]
-    agg = child.groupBy(key).agg(
-        F.array_sort(
-            F.collect_list(F.struct(*[F.col(c) for c in struct_cols]))
-        ).alias(out_col)
-    )
-    return parent.join(agg, key, "left")
 
 
 def fetch_by_topk_ids(docs: DataFrame, topk: DataFrame, key: str) -> DataFrame:

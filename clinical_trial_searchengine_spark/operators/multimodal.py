@@ -84,20 +84,6 @@ def extract_features(
     return media.mapInPandas(kernel, "media_id long, features array<double>")
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: updates metadata + re-derives payload hash (stub for
-    the pixel resample)."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.n_frames").alias("n_frames"),
-        ),
-    )
-
-
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sampling plumbing for video rows: one output row per kept frame
     index (posexplode over a JVM-generated sequence — no Python)."""

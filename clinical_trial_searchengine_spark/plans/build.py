@@ -28,7 +28,8 @@ Scale + performance notes (the part that matters at 10^12 docs):
 * The encode kernel processes a whole (shard, term_bucket, salt) group and
   encodes each term with NumPy inside — thousands of terms per group
   amortize the per-group Arrow overhead that a per-term grouping would pay
-  10^8 times at scale.  term_buckets caps group memory.
+  10^8 times at scale.  term_buckets (= spark.sql.shuffle.partitions)
+  caps group memory.
 * Hot terms ('def', 'the', ...; reference-domain analogues 'patient',
   'trial') are salted into contiguous doc_id sub-ranges inside the pack
   kernel; only salted runs go through the merge kernel, everything else
@@ -172,22 +173,23 @@ def assign_doc_ids(
     ranged_keys, offsets, total = _ranked_keys(
         corpus.select(*_KEYS), num_partitions
     )
-    if total > _BROADCAST_MAP_CAP:
-        ranged_keys.unpersist()
-        ranged, offsets, _ = _ranked_keys(corpus, num_partitions)
-        out = _with_offsets(ranged, offsets)
-        out._ctse_persisted = ranged
-        return out
     # (repo, path, commit) is the document identity everywhere (manifest,
     # upsert, tombstones); a duplicated key would m×n-explode the mapping
-    # join and hand multiple rows one doc_id — corrupt silently.  The
-    # check is one agg over the persisted ~100-byte key rows (≤ cap).
+    # join, or take two doc_ids on the full-row path — corrupt silently
+    # either way.  The check is one agg over the persisted ~100-byte key
+    # rows, run before the paths split.
     if ranged_keys.select(*_KEYS).distinct().count() != total:
         ranged_keys.unpersist()
         raise ValueError(
             "duplicate (repo, path, commit) keys in corpus — the key is "
             "the document identity; dedupe upstream (ingest/upsert do)"
         )
+    if total > _BROADCAST_MAP_CAP:
+        ranged_keys.unpersist()
+        ranged, offsets, _ = _ranked_keys(corpus, num_partitions)
+        out = _with_offsets(ranged, offsets)
+        out._ctse_persisted = ranged
+        return out
     mapping = _with_offsets(ranged_keys, offsets).select(*_KEYS, "doc_id")
     # null-safe equi-join: a NULL key column must not silently drop the
     # row from the index (inner equi-join semantics) — it ranked and got
@@ -678,7 +680,6 @@ def build_index(
     max_salts: int = 32,
     n_resume_groups: int = 4,
     norm_chunk: int = DEFAULT_NORM_CHUNK,
-    term_buckets: int | None = None,
     k1: float = 1.2,
     b: float = 0.75,
     verify_sha: bool = True,
@@ -883,9 +884,7 @@ def build_index(
     n_groups = max(1, min(n_resume_groups, n_shards))
     todo = [g for g in range(n_groups) if ("postings", g) not in done]
     need_term_stats = ("term_stats", 0) not in done
-    term_buckets = term_buckets or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    term_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     if todo or need_term_stats:
         stats_src: DataFrame | None = None  # shared written-postings scan

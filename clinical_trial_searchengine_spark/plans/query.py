@@ -1322,7 +1322,8 @@ def search(
         # Plan-skeleton cache (prepared-statement shape): a query service
         # sees the same texts repeatedly, and rebuilding + re-analyzing
         # the identical plan costs ~45 ms/query (build_df ~31 ms py4j +
-        # first-collect Catalyst work, scripts/probe_query_phases.py).
+        # first-collect Catalyst work; ftbench's query.plan_ms.first vs
+        # query.plan_ms.repeat report the miss and hit cost).
         # Keyed on everything the plan closes over — (qtf, k, kernel);
         # dfs/tombstones/meta are fixed per handle, and every index
         # mutation replaces the handle.  Each collect on the cached

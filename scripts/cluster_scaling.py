@@ -496,8 +496,8 @@ def _load_qcells() -> dict:
 
 def _migrate_qcell_keys(cells: dict) -> None:
     """Pre-serving-mode key migration ("1:200000" -> "per_query:1:200000")
-    — shared by the harvester and the baseline generator so the two can
-    never disagree on cell identity."""
+    — shared by this script's cell loader and gen_bench_baseline.py so
+    the two can never disagree on cell identity."""
     for key in [k for k in cells if k.count(":") == 1]:
         cells.setdefault(f"per_query:{key}", cells.pop(key))
 
@@ -541,10 +541,6 @@ def _save_qcells(cells: dict) -> None:
     os.makedirs(os.path.dirname(QHIST), exist_ok=True)
     with open(QHIST, "w") as f:
         json.dump(cells, f, indent=1)
-
-
-# kept as an alias: older harvest scripts import max_merge_query
-max_merge_query = merge_query
 
 
 def query_report() -> dict | None:

@@ -75,15 +75,17 @@ def main() -> None:
     # Calibrated-quiet epochs: probe-gated epochs whose ENTIRE probe trail
     # sits within tolerance of the FINAL calibration minima
     # (BENCH/probe_calibration.json).  The probe measures effective core
-    # speed directly (loadavg and the steal counter are blind on this
-    # host — see scripts/probe_gated_harvest.py), so these are the epochs
+    # speed directly (loadavg and the steal counter are blind on that
+    # host — BENCH/r4b/INVESTIGATION.md), so these are the epochs
     # demonstrably measured on an uncontended machine; epochs fired while
     # the calibration was still converging are excluded retroactively.
+    # The round-5 probe-gated harvester that recorded the trails is
+    # deleted; read it with `git show 924e007:scripts/probe_gated_harvest.py`.
     calib = _load("probe_calibration.json")
-    # per-dimension tolerances matching scripts/probe_gated_harvest.py:
-    # the single-core wall is near-deterministic; the 4-proc max-wall has
-    # +-10-15% spawn/scheduling jitter even on an idle host.
-    QUIET_TOL = 0.06      # == probe_gated_harvest --tol default
+    # per-dimension tolerances, the harvester's defaults: the single-core
+    # wall is near-deterministic; the 4-proc max-wall has +-10-15%
+    # spawn/scheduling jitter even on an idle host.
+    QUIET_TOL = 0.06      # == the harvester's --tol default
     QUIET_TOL_W4 = 0.15   # == --tol-w4
     STABLE_BAND = 0.08    # == --stable-band
     STABLE_BAND_W4 = 0.25  # == --stable-band-w4
@@ -198,7 +200,8 @@ def main() -> None:
           "calibrated minima for the whole round (same co-tenant era; "
           "zero strictly-quiet windows in ~5 h of probe-gated waiting), "
           "so the campaign switched to an UNBIASED loaded-era sweep: "
-          "probe_gated_harvest --cells with the gate opened (tol 3.0), "
+          "the probe-gated harvester (since deleted) run with --cells "
+          "and the gate opened (tol 3.0), "
           "firing all four cells in fixed rotation and min-merging — "
           "extra samples never raise a min, and sampling all cells "
           "equally cannot bias the ratio.  A transient dip during the "
@@ -218,7 +221,7 @@ def main() -> None:
         w("")
     if quiet_med is not None:
         w(f"* Calibrated-quiet epochs: probe-gated epochs "
-          f"(scripts/probe_gated_harvest.py) whose whole probe trail is "
+          f"(round-5 harvester, since deleted) whose whole probe trail is "
           f"within {QUIET_TOL:.0%} (w1) / {QUIET_TOL_W4:.0%} (w4) of the final calibrated core-speed "
           f"minima — i.e. epochs demonstrably measured on an uncontended "
           f"machine.  Median **{quiet_med:.3f}** over {len(quiet_effs)} "
@@ -302,7 +305,8 @@ def main() -> None:
               f"{qh['p50_sec']}s), speedup {qh['qps'] / ql['qps']:.2f}x, "
               f"scaling efficiency {qh['qps'] / ql['qps'] / 4:.3f}.  The "
               f"~40-75 ms/query driver fixed cost (plan analysis + py4j; "
-              f"scripts/profile_query_overhead.py) is the Amdahl term."
+              f"ftbench's query.plan_ms.* and query.exec_ms report it) "
+              f"is the Amdahl term."
               + (f"  Hardware ceiling for the scoring kernels "
                  f"(query_kernel_ceiling.json, no-Spark probe of the "
                  f"engine's decode + BM25 scatter-add + top-k): "

@@ -2,8 +2,10 @@
 
 The two-parallelism build cells (scripts/bench_scaling.py) measure the whole
 engine; this probe isolates the HARDWARE by running the exact hot kernels of
-the index build — vectorized analyze (tokenize/lower/factorize/lexsort) and
-the group posting encoder — in P identical, fully independent OS processes,
+the index build — the Arrow-native analyzer (``analyze_flat_arrow``: byte-LUT
+tokenize, dictionary encode, radix group) and the build's group encode body
+(``plans/build.py::_encode_term_arrays`` with the default "pfor" postings
+codec) — in P identical, fully independent OS processes,
 each on its own private copy of the same corpus chunk.  There is no Spark,
 no JVM, no shuffle, no shared state: if per-process kernel time grows from
 P=1 to P=4, the slowdown is the shared socket (memory bandwidth / LLC), not
@@ -36,34 +38,33 @@ PROCS = (1, 4, 8)
 
 def _kernel_cell(args) -> float:
     """One process's work: generate its own chunk (untimed), then run the
-    build's hot kernels (timed): analyze_flat -> term factorize -> lexsort
-    -> run-length bounds -> encode_postings_group."""
+    build's hot kernels (timed): analyze_flat_arrow -> term take ->
+    _encode_term_arrays(codec="pfor"), the pack and encode kernels' cores."""
     n_docs, seed = args
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from clinical_trial_searchengine_spark.functions.analysis import (
-        analyze_flat,
+        analyze_flat_arrow,
     )
-    from clinical_trial_searchengine_spark.functions.codec import (
-        encode_postings_group,
+    from clinical_trial_searchengine_spark.plans.build import (
+        _encode_term_arrays,
     )
     from clinical_trial_searchengine_spark.sources.corpus import (
         generate_corpus_pandas,
     )
 
     pdf = generate_corpus_pandas(n_docs, seed=seed)
-    texts = pdf["content"]
+    texts = pa.array(pdf["content"].tolist(), type=pa.string())
     t0 = time.time()
-    doc_idx, terms, tfs, _lens = analyze_flat(texts)
-    uniq, inv = np.unique(np.asarray(terms), return_inverse=True)
-    order = np.lexsort((np.asarray(doc_idx), inv))
-    inv_s = inv[order]
-    doc_s = np.asarray(doc_idx, dtype=np.uint64)[order]
-    tf_s = np.asarray(tfs, dtype=np.uint64)[order]
-    starts = np.flatnonzero(np.diff(inv_s, prepend=-1))
-    bounds = np.append(starts, inv_s.size).astype(np.int64)
-    bufs, _nb = encode_postings_group(doc_s, tf_s, bounds)
-    assert len(bufs) == len(uniq)
+    row_idx, dict_idx, dictionary, tfs, _lens = analyze_flat_arrow(texts)
+    terms = pc.take(dictionary, pa.array(dict_idx))
+    out = _encode_term_arrays(
+        0, 0, terms, np.asarray(row_idx, dtype=np.uint64),
+        np.asarray(tfs, dtype=np.uint64), codec="pfor",
+    )
+    assert out.num_rows == len(np.unique(dict_idx))
     return time.time() - t0
 
 

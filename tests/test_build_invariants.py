@@ -419,10 +419,33 @@ def test_doc_len_ignores_literal_control_chars(spark):
         assert got == list(expected), mode
 
 
-def test_assign_doc_ids_null_keys_and_duplicate_guard(spark):
+@pytest.mark.parametrize("cap", [
+    pytest.param(None, id="default_cap"),
+    pytest.param(0, id="cap0"),
+])
+def test_assign_doc_ids_null_keys_and_duplicate_guard(
+    spark, small_corpus_df, monkeypatch, cap
+):
     """NULL key columns must not silently drop rows (null-safe mapping
     join), and duplicate (repo,path,commit) keys must raise instead of
-    m x n-exploding the mapping join."""
+    m x n-exploding the mapping join — on the broadcast-mapping path and,
+    with the cap forced to 0, on the full-row range-shuffle fallback,
+    which must also assign the mapping path's doc_ids."""
+    from clinical_trial_searchengine_spark.plans import build
+
+    def ids_by_key(df):
+        return {
+            (r["repo"], r["path"], r["commit"]): r["doc_id"]
+            for r in assign_doc_ids(df).select(
+                "repo", "path", "commit", "doc_id"
+            ).collect()
+        }
+
+    if cap is not None:
+        mapping_ids = ids_by_key(small_corpus_df)
+        monkeypatch.setattr(build, "_BROADCAST_MAP_CAP", cap)
+        assert ids_by_key(small_corpus_df) == mapping_ids
+
     rows = [
         ("r1", "a.py", "c1", "py", "alpha"),
         ("r1", "b.py", None, "py", "bravo"),   # NULL commit

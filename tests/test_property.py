@@ -12,7 +12,6 @@ from hypothesis import strategies as st
 
 from clinical_trial_searchengine_spark.functions.analysis import (
     analyze_batch,
-    analyze_flat,
     analyze_flat_arrow,
     tokenize_text,
 )
@@ -102,17 +101,18 @@ _texts = st.lists(
 )
 
 
-@given(_texts, st.sampled_from(["standard", "porter"]))
-@settings(**_SETTINGS)
-def test_analyze_flat_equals_batch(texts, mode):
-    s = pd.Series(texts, dtype=object)
-    pairs, lens = analyze_batch(s, mode)
-    di, terms, tfs, dl = analyze_flat(s, mode)
-    assert list(dl) == lens
-    rebuilt = [[] for _ in texts]
-    for i, t, c in zip(di, terms, tfs):
+def _arrow_rows(arr, mode):
+    """analyze_flat_arrow's output as analyze_batch's shape: per-doc
+    ``[(term, tf), ...]`` lists plus ``doc_lens``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ri, dix, dic, tfs, dl = analyze_flat_arrow(arr, mode)
+    terms = pc.take(dic, pa.array(dix)).to_pylist()
+    rebuilt = [[] for _ in range(len(arr))]
+    for i, t, c in zip(ri, terms, tfs):
         rebuilt[i].append((t, int(c)))
-    assert rebuilt == pairs
+    return rebuilt, list(dl)
 
 
 @given(_texts, st.sampled_from(["standard", "porter"]))
@@ -125,22 +125,16 @@ def test_analyze_flat_equals_batch(texts, mode):
 @example(["\u0130x foo"], "porter")
 @example(["a\u0130n"], "porter")
 @example(["x\u212ay"], "porter")
-def test_analyze_flat_arrow_equals_flat(texts, mode):
-    """The Arrow-native analyzer is row-for-row identical to analyze_flat:
-    same (doc, term, tf) rows in the same order, same doc_lens — so swapping
-    it into the build tokenize stage cannot change any BM25 score."""
+def test_analyze_flat_arrow_equals_batch(texts, mode):
+    """The build's Arrow-native analyzer gives the oracle kernel's
+    (term, tf) pairs per doc, in the same order, and the same doc_lens — so
+    the build tokenize stage cannot change any BM25 score."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    s = pd.Series(texts, dtype=object)
-    di, terms, tfs, dl = analyze_flat(s, mode)
-    ri, dix, dic, tfs2, dl2 = analyze_flat_arrow(
-        pa.array(texts, type=pa.string()), mode
-    )
-    assert list(ri) == list(di)
-    assert pc.take(dic, pa.array(dix)).to_pylist() == list(terms)
-    assert list(tfs2) == list(tfs)
-    assert list(dl2) == list(dl)
+    pairs, lens = analyze_batch(pd.Series(texts, dtype=object), mode)
+    rebuilt, dl = _arrow_rows(pa.array(texts, type=pa.string()), mode)
+    assert rebuilt == pairs
+    assert dl == lens
 
 
 @given(st.lists(st.text(max_size=120), min_size=1, max_size=12))
@@ -149,16 +143,12 @@ def test_analyze_flat_arrow_sliced_input(texts):
     """Offset-carrying (sliced) Arrow arrays hit the zero-copy buffer math
     directly — the case a mapInArrow batch boundary produces."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     arr = pa.array(["PAD one", *texts], type=pa.string()).slice(1)
-    s = pd.Series(texts, dtype=object)
-    di, terms, tfs, dl = analyze_flat(s, "standard")
-    ri, dix, dic, tfs2, dl2 = analyze_flat_arrow(arr, "standard")
-    assert list(ri) == list(di)
-    assert pc.take(dic, pa.array(dix)).to_pylist() == list(terms)
-    assert list(tfs2) == list(tfs)
-    assert list(dl2) == list(dl)
+    pairs, lens = analyze_batch(pd.Series(texts, dtype=object), "standard")
+    rebuilt, dl = _arrow_rows(arr, "standard")
+    assert rebuilt == pairs
+    assert dl == lens
 
 
 @given(st.text(max_size=300))
