@@ -99,7 +99,9 @@ class SearchEngine:
         return self._handle
 
     def warm(self, postings: bool = True) -> "SearchEngine":
-        """Persist norms (+ postings) for a query-serving session."""
+        """Persist norms (+ postings, and under the cap the decoded
+        postings relation default queries score in the JVM) for a
+        query-serving session — see plans.query.IndexHandle.warm."""
         self.handle().warm(postings)
         return self
 
@@ -137,10 +139,8 @@ class SearchEngine:
     def search_many_rows(
         self, query_texts: dict[str, str], k: int = 10, **kwargs
     ) -> dict[str, list[tuple[int, float]]]:
-        """Serving twin of :meth:`search_many`: same one-job query-set
-        kernel, global top-k merged on the driver over the bounded
-        per-shard candidates (coordinating-node shape) — no Window
-        exchange."""
+        """Driver-side twin of :meth:`search_many`: its ranked rows (at
+        most k per query) as {query_id: [(doc_id, score)]}."""
         return search_many_rows(
             self.spark, self.index_dir, query_texts, k,
             handle=self.handle(), **kwargs,
@@ -151,8 +151,8 @@ class SearchEngine:
         concurrent-load surface: each request runs one plan-cached
         :meth:`search` on a pool as wide as the driver's CPUs, and
         identical in-flight requests share one search.  For a known query
-        set use :meth:`search_many_rows` (one job).  Call :meth:`warm`
-        first."""
+        set use :meth:`search_many_rows` (one scoring pass).  Call
+        :meth:`warm` first."""
         from clinical_trial_searchengine_spark.serving import SearchServer
 
         return SearchServer(self)

@@ -202,6 +202,97 @@ def decode_postings(buf: bytes, block_size: int = BLOCK_SIZE):
     return doc_ids, tfs
 
 
+def decode_postings_group(bufs, block_size: int = BLOCK_SIZE):
+    """Full decode of MANY posting buffers (any mix of wire versions) in
+    one vectorized pass — the decode twin of :func:`encode_postings_group`.
+
+    Returns (doc_ids uint64[T], tfs int64[T], bounds int64[len(bufs)+1]):
+    buffer i's postings are ``[bounds[i], bounds[i+1])``, equal to
+    ``decode_postings(bufs[i])``.  The cost is O(total bytes) numpy work
+    with no per-buffer Python, so a vocabulary of df=1 lists decodes as
+    fast as one long list.
+
+    The buffers are concatenated and read as ONE varint stream, with a
+    value boundary forced at every buffer end (a pfor frame may end on a
+    continuation byte).  Header and directory are varints in both wire
+    versions, so every buffer's ``n``, ``n_blocks`` and directory sit at
+    known value indexes.  Version-1 payloads are further values of that
+    stream; version-2 frames are unpacked by :func:`pfor.decode_frames`
+    at their absolute byte offsets (their stretch of the stream is never
+    read)."""
+    nbuf = len(bufs)
+    if nbuf == 0:
+        return (np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64),
+                np.zeros(1, dtype=np.int64))
+    blen = np.fromiter((len(x) for x in bufs), dtype=np.int64, count=nbuf)
+    a = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    bstart = np.cumsum(blen) - blen
+    is_last = (a & 0x80) == 0
+    is_last[bstart + blen - 1] = True
+    vid = np.zeros(a.size, dtype=np.int64)
+    np.cumsum(is_last[:-1], out=vid[1:])
+    vbyte = np.flatnonzero(np.concatenate(([True], is_last[:-1])))
+    # a stray run of continuation bytes inside a pfor frame can exceed 10
+    # groups; clamp its (never read) shift so it stays defined
+    pos = np.minimum(np.arange(a.size) - vbyte[vid], 9).astype(np.uint64)
+    vals = np.add.reduceat(
+        (a & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos), vbyte
+    )
+    vstart = vid[bstart]                     # value index of each header
+    version = vals[vstart].astype(np.int64)
+    bad = (version != _VERSION) & (version != 2)
+    assert not bad.any(), f"bad postings version {int(version[bad][0])}"
+    n = vals[vstart + 1].astype(np.int64)
+    nb = vals[vstart + 2].astype(np.int64)
+    bounds = np.concatenate(([0], np.cumsum(n))).astype(np.int64)
+
+    # per block (all buffers): owner buffer, index within it, directory
+    bo = np.repeat(np.arange(nbuf), nb)
+    blk_base = np.cumsum(nb) - nb
+    j = np.arange(bo.size, dtype=np.int64) - blk_base[bo]
+    di = vstart[bo] + 3 + 3 * j
+    first_delta = vals[di]
+    nbytes = vals[di + 2].astype(np.int64)
+    first_blk = blk_base[bo]                 # owner's first block
+    c = np.cumsum(first_delta)
+    firsts = c - (c - first_delta)[first_blk]
+    lo = j * block_size
+    bs = np.minimum(block_size, n[bo] - lo)
+    row_start = np.cumsum(bs) - bs
+
+    row_blk = np.repeat(np.arange(bo.size), bs)
+    k = np.arange(row_blk.size, dtype=np.int64) - row_start[row_blk]
+    gaps = np.empty(row_blk.size, dtype=np.uint64)
+    tfs = np.empty(row_blk.size, dtype=np.uint64)
+    v1 = version[bo] == _VERSION
+    r1 = np.flatnonzero(v1[row_blk])
+    if r1.size:
+        # payload values follow the directory: each block's gaps, then
+        # its tfs
+        blk = row_blk[r1]
+        pv = vstart[bo[blk]] + 3 + 3 * nb[bo[blk]] + 2 * lo[blk] + k[r1]
+        gaps[r1] = vals[pv]
+        tfs[r1] = vals[pv + bs[blk]]
+    if not v1.all():
+        from clinical_trial_searchengine_spark.functions.pfor import (
+            decode_frames,
+        )
+
+        b2 = np.flatnonzero(~v1)
+        # frames start right after the directory's last varint; the rows
+        # of the version-2 blocks, ascending, are their block order
+        dir_end = vbyte[vstart[bo[b2]] + 3 + 3 * nb[bo[b2]]]
+        ex = np.cumsum(nbytes) - nbytes
+        r2 = np.flatnonzero(~v1[row_blk])
+        gaps[r2], tfs[r2] = decode_frames(
+            a, dir_end + (ex - ex[first_blk])[b2], nbytes[b2], bs[b2]
+        )
+    # segmented cumsum: the gap at each block start is 0 by convention
+    cg = np.cumsum(gaps)
+    doc_ids = firsts[row_blk] + (cg - cg[row_start][row_blk])
+    return doc_ids, tfs.astype(np.int64), bounds
+
+
 def decode_directory(buf: bytes):
     """Decode only header + block directory (for block-max WAND skipping).
 

@@ -355,18 +355,14 @@ def _varint_decode_count(buf_np: np.ndarray, count: int,
     return vals[:count], offset + end_rel
 
 
-def _parse_layout(buf_np: np.ndarray, nbytes: np.ndarray,
-                  offsets: np.ndarray, n: int, block_size: int,
-                  idxs: np.ndarray | None = None):
-    """Per-(selected-)block subheaders + region offsets.
+def _parse_layout(buf_np: np.ndarray, poff: np.ndarray, nb: np.ndarray,
+                  bs: np.ndarray):
+    """Per-block subheaders + region offsets for blocks whose payloads
+    start at absolute byte offsets ``poff`` (``nb`` bytes, ``bs``
+    postings each).
 
-    Returns (bs, b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start,
-    exc_len), each indexed by selected-block position."""
-    if idxs is None:
-        idxs = np.arange(nbytes.size, dtype=np.int64)
-    poff = offsets[idxs].astype(np.int64)
-    nb = nbytes[idxs].astype(np.int64)
-    bs = np.minimum(block_size, n - idxs * block_size)
+    Returns (b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start,
+    exc_len), each indexed by block position."""
     b_g = buf_np[poff].astype(np.int64)
     b_tf = buf_np[poff + 1].astype(np.int64)
     n_eg = buf_np[poff + 2].astype(np.int64) | (
@@ -381,7 +377,7 @@ def _parse_layout(buf_np: np.ndarray, nbytes: np.ndarray,
     pt_start = pg_start + pg_len
     exc_start = pt_start + pt_len
     exc_len = nb - 6 - pg_len - pt_len
-    return bs, b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start, exc_len
+    return b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start, exc_len
 
 
 def _apply_exceptions(vals_g: np.ndarray, vals_t: np.ndarray,
@@ -456,10 +452,33 @@ def decode_blocks_pfor(
 def _decode_selected(buf_np: np.ndarray, idxs: np.ndarray, n: int,
                      firsts: np.ndarray, nbytes: np.ndarray,
                      offsets: np.ndarray, block_size: int):
-    bs, b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start, exc_len = (
-        _parse_layout(buf_np, nbytes, offsets, n, block_size, idxs)
+    bs = np.minimum(block_size, n - idxs * block_size)
+    gaps, tfs = decode_frames(
+        buf_np, offsets[idxs].astype(np.int64),
+        nbytes[idxs].astype(np.int64), bs,
     )
-    owner, pos = _seg_positions(bs)          # rows of the selected blocks
+    owner, _ = _seg_positions(bs)
+    row_start = np.cumsum(bs) - bs
+    # segmented cumsum: gap at each block start is 0 by convention
+    c = np.cumsum(gaps)
+    doc_ids = (
+        np.asarray(firsts, dtype=np.uint64)[idxs][owner]
+        + (c - c[row_start][owner])
+    ).astype(np.uint64)
+    return doc_ids, tfs.astype(np.int64)
+
+
+def decode_frames(buf_np: np.ndarray, poff: np.ndarray, nb: np.ndarray,
+                  bs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(gaps, tfs) uint64 of the blocks whose frames start at absolute
+    byte offsets ``poff`` of ``buf_np`` (``nb`` payload bytes and ``bs``
+    postings each), concatenated in block order.  The blocks may belong to
+    different posting lists: :func:`codec.decode_postings_group` passes
+    every version-2 block of a whole buffer group at once."""
+    b_g, b_tf, n_eg, n_et, pg_start, pt_start, exc_start, exc_len = (
+        _parse_layout(buf_np, poff, nb, bs)
+    )
+    owner, pos = _seg_positions(bs)
     buf_pad = np.concatenate((buf_np, np.zeros(8, dtype=np.uint8)))
     # unaligned little-endian u64 view at every byte offset (stride 1)
     words = np.ndarray(
@@ -468,15 +487,8 @@ def _decode_selected(buf_np: np.ndarray, idxs: np.ndarray, n: int,
     )
     gaps = _unpack_family(words, pg_start, b_g, owner, pos)
     tfs = _unpack_family(words, pt_start, b_tf, owner, pos)
-    row_start = np.cumsum(bs) - bs
     _apply_exceptions(
         gaps, tfs, buf_np, exc_start, exc_len, n_eg, n_et, b_g, b_tf,
-        row_start,
+        np.cumsum(bs) - bs,
     )
-    # segmented cumsum: gap at each block start is 0 by convention
-    c = np.cumsum(gaps)
-    doc_ids = (
-        np.asarray(firsts, dtype=np.uint64)[idxs][owner]
-        + (c - c[row_start][owner])
-    ).astype(np.uint64)
-    return doc_ids, tfs.astype(np.int64)
+    return gaps, tfs

@@ -246,38 +246,27 @@ def metrics_append(
 
 
 def _make_transcode_kernel(codec: str):
-    """mapInArrow kernel: decode every posting buffer (version-dispatched)
-    and re-encode the whole batch with ``codec`` in ONE vectorized group
-    pass.  Row order, term/cf/n_postings columns, and the group/shard
-    partition columns pass through unchanged."""
-    import numpy as np
+    """mapInArrow kernel: decode a batch's posting buffers
+    (version-dispatched) and re-encode them with ``codec``, each in ONE
+    vectorized group pass.  Row order, term/cf/n_postings columns, and the
+    group/shard partition columns pass through unchanged."""
     import pyarrow as pa
 
     from clinical_trial_searchengine_spark.functions.codec import (
-        decode_postings,
+        decode_postings_group,
         encode_postings_group,
     )
 
     def kernel(batches):
         for batch in batches:
             tbl = pa.Table.from_batches([batch]).combine_chunks()
-            n = len(tbl)
-            if n == 0:
+            if len(tbl) == 0:
                 continue
-            posts = tbl.column("postings").chunk(0)
-            ids_parts, tf_parts = [], []
-            for j in range(n):
-                d, t = decode_postings(posts[j].as_py())
-                ids_parts.append(d)
-                tf_parts.append(t)
-            bounds = np.concatenate(
-                ([0], np.cumsum([len(p) for p in ids_parts]))
-            ).astype(np.int64)
+            ids, tfs, bounds = decode_postings_group(
+                tbl.column("postings").to_pylist()
+            )
             bufs, n_blocks = encode_postings_group(
-                np.concatenate(ids_parts),
-                np.concatenate(tf_parts).astype(np.uint64),
-                bounds,
-                codec=codec,
+                ids, tfs.astype("uint64"), bounds, codec=codec
             )
             out = pa.table(
                 {

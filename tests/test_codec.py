@@ -118,6 +118,41 @@ def test_encode_postings_group_byte_identical():
             assert (t2 == tf[lo:hi].astype(np.int64)).all()
 
 
+def test_decode_postings_group_equals_per_buffer():
+    """The group decoder == per-buffer decode_postings on varint, pfor and
+    mixed-version groups, empty lists, df=1 and block-boundary lengths
+    (including exception-patched pfor frames and huge gaps), and on an
+    empty input."""
+    from clinical_trial_searchengine_spark.functions.codec import (
+        decode_postings_group,
+    )
+
+    rng = np.random.default_rng(11)
+    lengths = [0, 1, 2, BLOCK_SIZE - 1, BLOCK_SIZE, BLOCK_SIZE + 1,
+               2 * BLOCK_SIZE, 2 * BLOCK_SIZE + 1, 1000]
+
+    def buf(n, codec):
+        ids = np.sort(rng.choice(1 << 40, size=n, replace=False))
+        tfs = rng.integers(1, 40, n)
+        tfs[::13] = 1 << 33  # wider than any frame: pfor exceptions
+        return encode_postings(ids.astype(np.uint64), tfs.astype(np.uint64),
+                               codec=codec)[0]
+
+    varint = [buf(n, "varint") for n in lengths]
+    pfor = [buf(n, "pfor") for n in lengths]
+    mixed = varint + pfor
+    rng.shuffle(mixed)
+    for group in (varint, pfor, mixed, [pfor[1]] * 5, [varint[0]], []):
+        ids, tfs, bounds = decode_postings_group(group)
+        assert bounds.tolist()[:1] == [0] and len(bounds) == len(group) + 1
+        assert ids.dtype == np.uint64 and tfs.dtype == np.int64
+        for i, b in enumerate(group):
+            ref_ids, ref_tfs = decode_postings(b)
+            assert np.array_equal(ids[bounds[i]:bounds[i + 1]], ref_ids)
+            assert np.array_equal(tfs[bounds[i]:bounds[i + 1]], ref_tfs)
+        assert bounds[-1] == ids.size == tfs.size
+
+
 def test_merge_runs_kernel_spans_batches():
     """Direct (no-Spark) test of the write-pass merge kernel: a salted run
     split across two Arrow batches must be carried and merged exactly as

@@ -13,12 +13,31 @@ from tests.oracle import BM25Oracle
 TOL = 1e-9
 
 
-def _assert_rank_identical(expected, got, qid):
+def _assert_rank_identical(expected, got, qid, tol=TOL):
     assert [d for d, _ in expected] == [d for d, _ in got], (
         f"{qid}: docIDs differ\n exp={expected[:5]}\n got={got[:5]}"
     )
     for (d, es), (_, gs) in zip(expected, got):
-        assert abs(es - gs) <= TOL, f"{qid} doc {d}: {es} != {gs}"
+        assert abs(es - gs) <= tol, f"{qid} doc {d}: {es} != {gs}"
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names of ``df``'s executed physical plan, through AQE and
+    query-stage wrappers but not into a cached relation's own build plan
+    (an InMemoryTableScan is a leaf here)."""
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        names = [node.nodeName()]
+        if cls.endswith("QueryStageExec"):
+            return names + walk(node.plan())
+        kids = node.children()
+        for i in range(kids.size()):
+            names += walk(kids.apply(i))
+        return names
+
+    return walk(df._jdf.queryExecution().executedPlan())
 
 
 @pytest.fixture(scope="module")
@@ -63,28 +82,29 @@ def test_rank_identity_pruned(built_index, oracle_standard):
 
 
 @pytest.mark.parametrize(
-    "shape", ["cold", "warm_broadcast", "warm_cogroup", "df_lookup"]
+    "shape", ["cold", "warm_decoded", "warm_cogroup", "df_lookup"]
 )
 def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
-    """Every norms shape of the kernel plan (_apply_kernel) and both
-    df-lookup modes: search (default and pruned), search_many and
-    search_many_rows == oracle.  warm_cogroup forces the norms preload cap
-    down so the warmed cogroup plan runs; df_lookup forces the term
-    dictionary preload cap down so dfs come from per-query lookups."""
+    """Every scoring shape — decoded (JVM), warmed cogroup, cold cogroup —
+    and both df-lookup modes: search (default and pruned), search_many
+    and search_many_rows == oracle, scores bit for bit.  warm_cogroup
+    forces the decoded-postings cap to 0 so the warmed cogroup plan runs;
+    df_lookup forces the term dictionary preload cap down so dfs come
+    from per-query lookups (and the cap counts postings by aggregate)."""
     from clinical_trial_searchengine_spark.engine import SearchEngine
 
     eng = SearchEngine(spark, built_index.index_dir)
     handle = eng.handle()
-    if shape == "warm_broadcast":
+    if shape == "warm_decoded":
         handle.warm(postings=True)
     elif shape == "warm_cogroup":
-        handle.warm(postings=True, preload_norms_docs_cap=0)
+        handle.warm(postings=True, decoded_postings_cap=0)
     elif shape == "df_lookup":
         handle.warm(postings=True, preload_terms_cap=0)
-    assert (handle._norms_bcast is not None) == (
-        shape in ("warm_broadcast", "df_lookup")
+    assert (handle.decoded is not None) == (
+        shape in ("warm_decoded", "df_lookup")
     )
-    assert handle._df_preloaded == (shape in ("warm_broadcast", "warm_cogroup"))
+    assert handle._df_preloaded == (shape in ("warm_decoded", "warm_cogroup"))
     try:
         qs = reference_queries()
         exp = {q["query_id"]: oracle_standard.search(q["text"], q["k"])
@@ -93,7 +113,8 @@ def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
             qid = q["query_id"]
             for kernel in (None, "pruned"):
                 got = eng.search_topk_rows(q["text"], q["k"], kernel=kernel)
-                _assert_rank_identical(exp[qid], got, f"{shape}/{qid}/{kernel}")
+                _assert_rank_identical(exp[qid], got,
+                                       f"{shape}/{qid}/{kernel}", tol=0.0)
         texts = {q["query_id"]: q["text"] for q in qs}
         kmax = max(q["k"] for q in qs)
         rows = eng.search_many_rows(texts, k=kmax)
@@ -102,11 +123,91 @@ def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
             batch[r["query_id"]].append((r["rank"], r["doc_id"], r["score"]))
         for q in qs:
             qid, k = q["query_id"], q["k"]
-            _assert_rank_identical(exp[qid], rows[qid][:k], f"{shape}/rows/{qid}")
+            _assert_rank_identical(exp[qid], rows[qid][:k],
+                                   f"{shape}/rows/{qid}", tol=0.0)
             many = [(d, s) for _, d, s in sorted(batch[qid])][:k]
-            _assert_rank_identical(exp[qid], many, f"{shape}/many/{qid}")
+            _assert_rank_identical(exp[qid], many, f"{shape}/many/{qid}",
+                                   tol=0.0)
     finally:
         handle.close()
+
+
+def test_decoded_search_plan_is_jvm_only_one_job(spark, built_index):
+    """A warmed, plan-cached search on the decoded shape runs in plain
+    plan nodes — cached scan, broadcast join, aggregate with no exchange,
+    TakeOrderedAndProject, no Python node — and one job per repeat."""
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+
+    eng = SearchEngine(spark, built_index.index_dir).warm()
+    try:
+        df = eng.search("def license import", 10)
+        df.collect()  # first run: AQE materializes the cached-table stage
+        nodes = _plan_nodes(df)
+        assert "InMemoryTableScan" in nodes, nodes
+        assert "TakeOrderedAndProject" in nodes, nodes
+        assert "Exchange" not in nodes, nodes  # only BroadcastExchange
+        python = {"FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+                  "ArrowEvalPython", "BatchEvalPython", "MapInArrow",
+                  "MapInPandas"}
+        assert not python & set(nodes), nodes
+        sc = spark.sparkContext
+        sc.setJobGroup("decoded_one_job", "repeat of a cached plan")
+        try:
+            assert eng.search("def license import", 10) is df
+            df.collect()
+            jobs = sc.statusTracker().getJobIdsForGroup("decoded_one_job")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == 1, jobs
+    finally:
+        eng.handle().close()
+
+
+def test_decoded_filter_and_boost_match_fallback_and_kernel(
+    spark, built_index, monkeypatch
+):
+    """On the decoded shape, a pushed filter (allow-mask join) and a
+    pushed boost (multiplier join) return the same rows and scores as the
+    score-everything + join fallback and as the Python exhaustive kernel
+    with the same pushdowns; a set mixing filtered and unfiltered queries
+    keeps every row of the unfiltered one."""
+    from pyspark.sql import functions as F
+
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+    from clinical_trial_searchengine_spark.plans import query as q
+    from clinical_trial_searchengine_spark.plans import segments as seg
+
+    dm = spark.read.parquet(seg.path_of(built_index.index_dir, seg.DOC_META))
+    flt = dm.where(F.col("doc_id") % 2 == 0).select("doc_id")
+    boost = dm.select(
+        "doc_id",
+        F.when(F.col("doc_id") % 3 == 0, 2.5)
+        .when(F.col("doc_id") % 7 == 0, 0.4)
+        .otherwise(1.0).alias("_boost"),
+    )
+    eng = SearchEngine(spark, built_index.index_dir).warm()
+    assert eng.handle().decoded is not None
+
+    def rows(kernel=None, **kw):
+        return [(r["doc_id"], r["score"])
+                for r in eng.search("def license", 10, kernel=kernel,
+                                    **kw).collect()]
+
+    try:
+        for kw in ({"filter_doc_ids": flt}, {"boost": boost},
+                   {"boost": boost, "filter_doc_ids": flt}):
+            decoded = rows(**kw)
+            assert decoded and decoded == rows(kernel="exhaustive", **kw)
+            monkeypatch.setattr(q, "_FILTER_PUSH_CAP", 0)
+            monkeypatch.setattr(q, "_BOOST_PUSH_CAP", 0)
+            assert decoded == rows(**kw), kw.keys()
+            monkeypatch.undo()
+        texts = {"filtered": "def license", "plain": "def license"}
+        got = eng.search_many_rows(texts, k=10, filters={"filtered": flt})
+        assert got["plain"] == rows()
+        assert got["filtered"] == rows(filter_doc_ids=flt)
+    finally:
+        eng.handle().close()
 
 
 def test_plan_cache_is_lru(spark, built_index, monkeypatch):

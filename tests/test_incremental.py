@@ -141,17 +141,23 @@ def test_compact_collapses_generations(spark, corpora, tmp_path):
 
 
 def test_multi_gen_warmed_handle(spark, corpora, tmp_path):
-    """warm() on a multi-generation index (co-partition by (gen, shard) +
-    merged-term-dictionary preload) must not change results."""
+    """warm() on a multi-generation index (co-partition by (gen, shard),
+    merged-term-dictionary preload, decoded relation with GLOBAL doc_ids)
+    must not change results: the decoded shape equals the cold cogroup
+    kernel and the warmed cogroup kernel, rows and scores."""
     part, full = corpora
     d = str(tmp_path / "warm")
     incremental_index(spark, part, d, shard_size=48)
     incremental_index(spark, full, d, shard_size=48)
     eng = SearchEngine(spark, d)
-    cold = eng.search_topk_rows("def license", 10)
     eng2 = SearchEngine(spark, d).warm(postings=True)
     assert eng2.handle()._df_preloaded
-    assert eng2.search_topk_rows("def license", 10) == cold
+    assert eng2.handle().decoded is not None
+    for q in ["def license", "import streaming tokens", "the"]:
+        cold = eng.search_topk_rows(q, 10)
+        assert cold and eng2.search_topk_rows(q, 10) == cold
+        assert eng2.search_topk_rows(q, 10, kernel="exhaustive") == cold
+    eng2.handle().close()
 
 
 def test_auto_compaction_policy(spark, tmp_path):

@@ -109,6 +109,29 @@ def test_upsert_kernels_rank_identical(spark, upserted):
             assert got == ref, (q, kernel)
 
 
+def test_upsert_decoded_shape_matches_exhaustive(spark, upserted):
+    """The decoded relation drops tombstoned docs at warm() time: on the
+    upserted (two-generation) index, default warmed searches, search_all
+    and search_many equal the explicit exhaustive kernel's rows and
+    scores, and never serve a tombstoned doc."""
+    eng = SearchEngine(spark, upserted[0].index_dir).warm()
+    tomb = set(seg.read_tombstones(eng.index_dir))
+    try:
+        assert eng.handle().decoded is not None
+        for q in ["def license", "validation tokenizer", "zzzupserted"]:
+            got = eng.search_topk_rows(q, 10)
+            assert got and got == eng.search_topk_rows(
+                q, 10, kernel="exhaustive")
+            assert not any(d in tomb for d, _ in got)
+            every = sorted((r["doc_id"], r["score"])
+                           for r in eng.search_all(q).collect())
+            assert not any(d in tomb for d, _ in every)
+            assert got == sorted(every, key=lambda t: (-t[1], t[0]))[:10]
+            assert eng.search_many_rows({"q": q}, k=10)["q"] == got
+    finally:
+        eng.handle().close()
+
+
 def test_doc_meta_tombstone_mask_is_anti_join(spark, upserted, monkeypatch):
     """doc_meta masks tombstones with a broadcast left-anti join — the plan
     does not inline the tombstone ids as an IN list — and include_meta
