@@ -131,7 +131,7 @@ def main() -> None:
     # r3 phantom -9%).  min-of-3 is the standard steal-robust estimator for
     # a deterministic workload; the observed spread is exported as
     # query_noise_rel_spread so the JSON itself says how noisy the host was.
-    eng.warm(postings=True)
+    eng.warm()
     for q in reference_queries():
         eng.search_topk_rows(q["text"], k=q["k"])
     per_q: list[float] = []

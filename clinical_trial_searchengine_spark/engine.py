@@ -98,11 +98,11 @@ class SearchEngine:
             self._handle = IndexHandle(self.spark, self.index_dir)
         return self._handle
 
-    def warm(self, postings: bool = True) -> "SearchEngine":
-        """Persist norms (+ postings, and under the cap the decoded
-        postings relation default queries score in the JVM) for a
+    def warm(self) -> "SearchEngine":
+        """Preload the term dictionary and, under the cap, cache the
+        decoded postings relation default queries score in the JVM, for a
         query-serving session — see plans.query.IndexHandle.warm."""
-        self.handle().warm(postings)
+        self.handle().warm()
         return self
 
     def search(self, query_text: str, k: int = 10, **kwargs) -> DataFrame:

@@ -313,28 +313,6 @@ def decode_directory(buf: bytes):
     return n, firsts, max_tfs, nbytes, offsets.astype(np.int64)
 
 
-def decode_block(
-    buf: bytes,
-    block_idx: int,
-    n: int,
-    firsts: np.ndarray,
-    nbytes: np.ndarray,
-    offsets: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-):
-    """Decode a single block selected via :func:`decode_directory`."""
-    if _peek_version(buf) == 2:
-        return decode_blocks(
-            buf, [block_idx], n, firsts, nbytes, offsets, block_size
-        )
-    lo = block_idx * block_size
-    bs = min(block_size, n - lo)
-    o = int(offsets[block_idx])
-    vals = varint_decode(memoryview(buf)[o : o + int(nbytes[block_idx])])
-    doc_ids = firsts[block_idx] + np.cumsum(vals[:bs])
-    return doc_ids, vals[bs : 2 * bs].astype(np.int64)
-
-
 def decode_blocks(
     buf: bytes,
     idxs,

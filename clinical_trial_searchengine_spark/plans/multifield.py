@@ -122,9 +122,9 @@ class MultiFieldHandle:
             for name in self.meta["fields"]
         }
 
-    def warm(self, postings: bool = True) -> "MultiFieldHandle":
+    def warm(self) -> "MultiFieldHandle":
         for h in self.handles.values():
-            h.warm(postings)
+            h.warm()
         return self
 
 

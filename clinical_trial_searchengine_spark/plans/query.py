@@ -11,25 +11,25 @@ over a query SET ({query_id: qtf}; a single query is a set of one):
   -> filter/boost tables collected once into kernel-pushable arrays
      (:func:`_prepare_pushdowns`); oversized or join-defined tables take
      the exact score-everything + join fallback
-  -> scoring in one of three shapes:
+  -> scoring in one of two shapes:
      * decoded (JVM): a handle warmed under its postings cap, with no
        explicit ``kernel``, scores in plain plan nodes over the decoded
        (term, doc_id, norm) relation :meth:`IndexHandle.warm` cached
        (:func:`_score_decoded`): term filter -> broadcast join with the
        set's (query_id, term, pos, w) table -> groupBy(query_id, doc_id)
        with no exchange -> term-ordered float64 sum.  No Python stage.
-     * warmed cogroup and cold cogroup (:func:`_apply_kernel`): a
-       per-(gen, shard) Python kernel over the term-pruned postings scan
-       (parquet predicate pushdown on term-sorted files, or the persisted
-       layout) cogrouped with the shard's norms — for explicit kernels,
-       :func:`profile_query`, cold handles and handles past the cap.
+     * cogroup (:func:`_apply_kernel`): a per-(gen, shard) Python kernel
+       over the term-pruned parquet postings scan (predicate pushdown on
+       term-sorted files) cogrouped with the norms of the shards it hits
+       — for explicit kernels, :func:`profile_query`, cold handles and
+       handles past the cap.
      Kernel choice (:func:`_choose_kernel`): the exhaustive set kernel for
      every set, or — for a set of one query without boost — vectorized
      block-max 'pruned' once the candidate pool dwarfs k (the
      doc-at-a-time Python WAND 'wand_ref' is a test-only oracle; all
      rank-identical)
   -> (query_id, doc_id, score) candidate rows: every match on the decoded
-     shape, a per-shard bounded top-k per query on the kernel shapes
+     shape, a per-shard bounded top-k per query on the cogroup shape
   -> front-end merge: ``orderBy(score desc, doc_id asc).limit(k)``
      (Catalyst TakeOrderedAndProject) for :func:`search`, one per-query
      Window rank for :func:`search_many` and :func:`search_many_rows`.
@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 from clinical_trial_searchengine_spark.functions.analysis import tokenize_text
 from clinical_trial_searchengine_spark.functions.codec import (
-    decode_block,
     decode_blocks,
     decode_directory,
     decode_postings,
@@ -534,8 +533,8 @@ def _make_wand_kernel(queries, N, avgdl, k1, b, shard_size, k,
 
         def _load_block(self, bi):
             self.bidx = bi
-            self.ids, self.tfs = decode_block(
-                self.buf, bi, self.n, self.firsts, self.nbytes, self.offsets
+            self.ids, self.tfs = decode_blocks(
+                self.buf, [bi], self.n, self.firsts, self.nbytes, self.offsets
             )
             self.ptr = 0
 
@@ -665,10 +664,11 @@ def analyze_query(query_text: str, mode: str) -> Counter:
 
 
 class IndexHandle:
-    """Opened index: meta + lazily-read postings/norms DataFrames, shared
-    across queries.  ``warm()`` persists them co-partitioned and, under
-    its postings cap, caches the decoded (term, doc_id, norm) relation
-    that default queries then score in the JVM (``self.decoded``).
+    """Opened index: meta + lazily-read postings/norms parquet scans,
+    shared across queries.  ``warm()`` preloads the term dictionary and,
+    under its postings cap, caches the decoded (term, doc_id, norm)
+    relation that default queries then score in the JVM
+    (``self.decoded``), the one relation it caches.
 
     Delta generations: when ``generations.json`` exists, postings/norms are
     the union of every generation's segments tagged with a ``gen`` column,
@@ -719,7 +719,6 @@ class IndexHandle:
             self.norms = spark.read.parquet(
                 seg.path_of(index_dir, seg.NORMS)
             ).withColumn("gen", F.lit(0))
-        self.warmed = False
         self._df_cache: dict[str, int] = {}
         self._df_preloaded = False
         # the cached (term, doc_id, norm) relation of the decoded shape —
@@ -821,55 +820,41 @@ class IndexHandle:
                 self._plan_cache.popitem(last=False)
         return plan
 
-    def warm(
-        self, postings: bool = True, preload_terms_cap: int = 2_000_000,
-        decoded_postings_cap: int = 12_000_000,
-    ) -> "IndexHandle":
-        """Persist norms and postings partitioned by (gen, shard), the
-        layout a cogroup kernel (explicit ``kernel=``, :func:`profile_query`,
-        every query past the cap) reads from memory.
+    def warm(self) -> "IndexHandle":
+        """Preload the term dictionary (term -> global df) into the driver
+        when it has <= ``_PRELOAD_TERMS_CAP`` entries, eliminating the
+        per-query df-lookup job; at web-scale vocabularies the cap keeps
+        the driver safe and lookups stay per-query term-pruned scans.
 
-        Also preloads the term dictionary (term -> global df) into the
-        driver when it has <= ``preload_terms_cap`` entries, eliminating the
-        per-query df-lookup job; at web-scale vocabularies the cap keeps the
-        driver safe and lookups stay per-query term-pruned scans.
-
-        When the index holds <= ``decoded_postings_cap`` postings (the sum
+        When the index holds <= ``_DECODED_POSTINGS_CAP`` postings (the sum
         of global df), every posting list is also decoded ONCE, by a
-        cogroup over that layout (:func:`_make_decode_kernel`), into
-        ``(term, doc_id, norm)`` rows — global doc_ids, tombstones dropped
-        (they are fixed per handle: every mutation replaces it) — hashed
-        on doc_id, term-sorted within each partition so cached-batch
-        min/max stats skip most batches of a term-filtered scan, and
-        cached.  Default queries then score in the JVM over it
-        (:func:`_score_decoded`): no Python stage per query.  The cached
-        relation measured ~10 B/posting against ~1.5 B encoded, so the
-        default cap bounds it near 120 MB.  Past the cap — the 100 TB case
-        — queries keep the cogroup kernel over the persisted layout."""
-        # plans built pre-warm reference the unpersisted relations /
-        # cogroup path; correct but slow — rebuild them against the
-        # warmed layout
+        (gen, shard) cogroup of the postings and norms scans
+        (:func:`_make_decode_kernel`), into ``(term, doc_id, norm)`` rows —
+        global doc_ids, tombstones dropped (they are fixed per handle:
+        every mutation replaces it) — hashed on doc_id, term-sorted within
+        each partition so cached-batch min/max stats skip most batches of
+        a term-filtered scan, and cached.  Default queries then score in
+        the JVM over it (:func:`_score_decoded`): no Python stage per
+        query.  The cached relation measured ~10 B/posting against ~1.5 B
+        encoded, so the cap bounds it near 120 MB.  Past the cap — the
+        100 TB case — queries run the cogroup kernel over the term-pruned
+        parquet scan, as on a cold handle."""
+        # plans built pre-warm reference the cogroup path; correct but
+        # slow — rebuild them against the decoded relation
         self._plan_cache.clear()
         ts = self.spark.read.parquet(self._term_stats_path())
-        if ts.count() <= preload_terms_cap:
+        if ts.count() <= _PRELOAD_TERMS_CAP:
             self._df_cache = {
                 r["term"]: int(r["df"])
                 for r in ts.select("term", "df").collect()
             }
             self._df_preloaded = True
-        n = max(1, int(self.meta["n_shards"])) * max(1, len(self.bases))
-        self.norms = self.norms.repartition(n, "gen", "shard").persist()
-        self.norms.count()
-        if not postings:
-            return self
-        self.postings = self.postings.repartition(n, "gen", "shard").persist()
-        self.postings.count()
-        self.warmed = True
         n_postings = (
             sum(self._df_cache.values()) if self._df_preloaded
             else int(ts.agg(F.sum("df")).collect()[0][0] or 0)
         )
-        if n_postings <= decoded_postings_cap:
+        if n_postings <= _DECODED_POSTINGS_CAP:
+            n = max(1, int(self.meta["n_shards"])) * max(1, len(self.bases))
             self.decoded = (
                 self.postings.groupby("gen", "shard")
                 .cogroup(self.norms.groupby("gen", "shard"))
@@ -886,8 +871,6 @@ class IndexHandle:
         return self
 
     def close(self) -> None:
-        self.norms.unpersist()
-        self.postings.unpersist()
         if self.decoded is not None:
             self.decoded.unpersist()
             self.decoded = None
@@ -928,6 +911,15 @@ _BOOST_PUSH_CAP = 1 << 17
 # evicted first).
 _PLAN_CACHE_CAP = 512
 
+# warm() preloads the term dictionary into the driver up to this many
+# terms; past it, each query looks its dfs up by a term-pruned scan.
+_PRELOAD_TERMS_CAP = 2_000_000
+
+# warm() caches the decoded postings relation up to this many postings
+# (~120 MB at the ~10 B/posting measured); past it, queries run the
+# cogroup kernel over the parquet scan.
+_DECODED_POSTINGS_CAP = 12_000_000
+
 
 def _choose_kernel(
     queries: dict, dfs: dict, k: int, kernel: str | None = None,
@@ -965,26 +957,21 @@ def _apply_kernel(
     handle: IndexHandle, terms: list, kernel, schema,
     empty_fn=_empty_result,
 ) -> DataFrame:
-    """Run a per-(gen, shard) kernel over the term-pruned postings scan
-    cogrouped with the shard's norms — shared by scoring and profiling.
-
-    Warmed handles cogroup the persisted layout (scanning non-hit norm
-    shards is free).  Cold handles prune the norm chunks to the shards
-    with hits by a broadcast semi-join."""
+    """Run a per-(gen, shard) kernel over the term-pruned parquet postings
+    scan cogrouped with the shard's norms — the cogroup shape, shared by
+    scoring and profiling.  The norm chunks are pruned to the shards with
+    hits by a broadcast semi-join."""
     postings = handle.postings.where(F.col("term").isin(list(terms)))
+    hit_shards = postings.select("gen", "shard").distinct()
+    norms = handle.norms.join(
+        F.broadcast(hit_shards), ["gen", "shard"], "left_semi"
+    )
 
     def run_cogroup(key, p_pdf, n_pdf):
         if p_pdf.empty or n_pdf.empty:
             return empty_fn()
         return kernel(key, p_pdf, _norms_dl(n_pdf))
 
-    if handle.warmed:
-        norms = handle.norms
-    else:
-        hit_shards = postings.select("gen", "shard").distinct()
-        norms = handle.norms.join(
-            F.broadcast(hit_shards), ["gen", "shard"], "left_semi"
-        )
     return (
         postings.groupby("gen", "shard")
         .cogroup(norms.groupby("gen", "shard"))
@@ -1054,7 +1041,7 @@ def _score_set(
 ) -> DataFrame:
     """Score a query set in the handle's shape: ``(query_id, doc_id,
     score)`` rows holding every per-query top-k row — every match on the
-    decoded shape, per-(gen, shard) top-k on the kernel shapes."""
+    decoded shape, per-(gen, shard) top-k on the cogroup shape."""
     allows = {q: v for q, v in (allows or {}).items() if q in queries}
     boosts = {q: v for q, v in (boosts or {}).items() if q in queries}
     terms = sorted({t for q in queries.values() for t in q})
@@ -1259,15 +1246,16 @@ def profile_query(
     k: int = 10,
     handle: IndexHandle | None = None,
 ) -> tuple[dict, DataFrame]:
-    """Kernel introspection for one query: which kernel would a kernel
+    """Kernel introspection for one query: which kernel would the cogroup
     shape run, and did block-max pruning fire?  (A handle with the
-    decoded relation scores default queries without a kernel; its
-    explicit-``kernel`` searches and this profile run the cogroup shape.)
+    decoded relation scores default queries without a kernel; this
+    profile, like every explicit-``kernel`` search, runs the cogroup
+    shape over the parquet scan.)
 
     Returns ``(decision, stats_df)``:
 
     * ``decision`` — the driver-side adaptive-kernel choice
-      (:func:`_choose_kernel`, the same call the kernel shapes make) with
+      (:func:`_choose_kernel`, the same call the cogroup shape makes) with
       its inputs: {kernel, n_candidates, threshold, k, terms: {term: df}}.
     * ``stats_df`` — the pruned kernel run in profile mode: one row per
       (gen, shard, term) with n_blocks / blocks_decoded / decode_mode

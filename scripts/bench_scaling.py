@@ -121,7 +121,7 @@ def run_cell(cpus: int, n_docs: int, run_queries: bool) -> dict:
     }
 
     if run_queries:
-        eng.warm(postings=True)
+        eng.warm()
         qs = reference_queries()
         for q in qs[:3]:  # steady-state: codegen + kernel warm
             eng.search_topk_rows(q["text"], k=q["k"])

@@ -185,7 +185,7 @@ def main() -> None:
             ("TakeOrderedAndProject", ["TakeOrderedAndProject"]),
         ],
     )
-    eng.warm(postings=True)
+    eng.warm()
     audit(
         "Segment engine query, warmed",
         "After warm(), the postings are decoded once into a cached "
@@ -209,6 +209,23 @@ def main() -> None:
              ("nodes", lambda n: "TakeOrderedAndProject" in n)),
         ],
         execute=True,
+    )
+
+    # 5b. an explicit kernel on the warmed handle: the cogroup shape over
+    #     the term-pruned parquet scan, never a cached copy of the postings
+    audit(
+        "Segment engine query, warmed, explicit kernel",
+        "warm() caches only the decoded relation, so an explicit "
+        "kernel='exhaustive' search on a warmed handle runs the cogroup "
+        "kernel over the same term-pruned parquet scan as a cold query: "
+        "the term IN(...) filter reaches the parquet reader, and no "
+        "cached relation is scanned.",
+        eng.search("merge join filter", k=10, kernel="exhaustive"),
+        [
+            ("term IN(...) filter pushed to parquet",
+             ["PushedFilters: [In(term"]),
+            ("no InMemoryTableScan", ["NO_InMemoryTableScan"]),
+        ],
     )
 
     # 5c. selective-filter pushdown: the allow-mask joins by broadcast

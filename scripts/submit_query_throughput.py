@@ -66,7 +66,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("ctse-query-throughput").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    eng = SearchEngine(spark, args.index_dir).warm(postings=True)
+    eng = SearchEngine(spark, args.index_dir).warm()
     qs = reference_queries()
 
     if args.mode == "marginal":

@@ -41,7 +41,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("ctse-search").getOrCreate()
     eng = SearchEngine(spark, args.index_dir)
     if not args.no_warm:
-        eng.warm(postings=True)
+        eng.warm()
     for q in args.queries:
         t0 = time.time()
         df = eng.search(q, k=args.k, kernel=args.kernel,

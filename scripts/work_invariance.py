@@ -113,7 +113,7 @@ def run_queries(master: str, n_docs: int) -> dict:
             eng.build(generate_corpus_df(spark, n_docs),
                       shard_size=max(4096, n_docs // 8),
                       hot_df_threshold=max(1000, n_docs // 10))
-        eng.warm(postings=True)
+        eng.warm()
         eng.search_topk_rows("warmup query", 10)
 
         def snap():

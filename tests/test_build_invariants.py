@@ -383,6 +383,50 @@ def test_build_matches_golden_digests(spark, small_corpus_df, tmp_path):
         shutil.rmtree(d)
 
 
+def test_failed_postings_write_resumes_to_golden(
+    spark, small_corpus_df, tmp_path, monkeypatch
+):
+    """Failure injection: the postings-write job raises on one resume
+    group, so the build fails with no ('postings', g) done row for it; a
+    rebuild into the same dir without the fault resumes and writes the
+    golden standard-mode segments byte for byte."""
+    from clinical_trial_searchengine_spark.plans import build as build_mod
+
+    merge_runs = build_mod._make_merge_runs_kernel
+    n_groups = GOLDEN_BUILD_KWARGS["n_resume_groups"]
+    bad_group = 1
+
+    def failing_merge_runs_kernel(codec="varint"):
+        # nested closures pickle by value: the Python workers run the
+        # fault without importing this module
+        merge = merge_runs(codec)
+
+        def kernel(batches):
+            for batch in merge(batches):
+                shard = batch.column("shard").to_numpy()
+                if (shard % n_groups == bad_group).any():
+                    raise RuntimeError("injected postings-write failure")
+                yield batch
+
+        return kernel
+
+    d = str(tmp_path / "resumed")
+    monkeypatch.setattr(
+        build_mod, "_make_merge_runs_kernel", failing_merge_runs_kernel
+    )
+    with pytest.raises(Exception, match="injected postings-write failure"):
+        SearchEngine(spark, d).build(
+            small_corpus_df, mode="standard", **GOLDEN_BUILD_KWARGS
+        )
+    assert ("postings", bad_group) not in seg.manifest_done(spark, d)
+    monkeypatch.undo()
+
+    SearchEngine(spark, d).build(
+        small_corpus_df, mode="standard", **GOLDEN_BUILD_KWARGS
+    )
+    assert _segment_digests(spark, d) == GOLDEN_DIGESTS["standard"]
+
+
 def test_doc_len_ignores_literal_control_chars(spark):
     """The JVM doc_len expression must equal the analyzer's token count in
     both modes: a literal \\x01 is a separator, not a token; porter drops

@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 
 from clinical_trial_searchengine_spark.functions.codec import (
     BLOCK_SIZE,
-    decode_block,
+    decode_blocks,
     decode_directory,
     decode_postings,
     encode_postings,
@@ -72,7 +72,7 @@ def test_block_directory_and_selective_decode():
         lo, hi = b * BLOCK_SIZE, min((b + 1) * BLOCK_SIZE, n)
         assert firsts[b] == ids[lo]
         assert max_tfs[b] == tfs[lo:hi].max()
-        db, tb = decode_block(buf, b, N, firsts, nbytes, offsets)
+        db, tb = decode_blocks(buf, [b], N, firsts, nbytes, offsets)
         assert np.array_equal(db, ids[lo:hi])
         assert np.array_equal(tb, tfs[lo:hi].astype(np.int64))
 

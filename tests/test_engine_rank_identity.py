@@ -82,29 +82,31 @@ def test_rank_identity_pruned(built_index, oracle_standard):
 
 
 @pytest.mark.parametrize(
-    "shape", ["cold", "warm_decoded", "warm_cogroup", "df_lookup"]
+    "shape", ["cold", "warm_decoded", "past_cap", "df_lookup"]
 )
-def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
-    """Every scoring shape — decoded (JVM), warmed cogroup, cold cogroup —
-    and both df-lookup modes: search (default and pruned), search_many
-    and search_many_rows == oracle, scores bit for bit.  warm_cogroup
-    forces the decoded-postings cap to 0 so the warmed cogroup plan runs;
-    df_lookup forces the term dictionary preload cap down so dfs come
+def test_rank_identity_norms_shapes(spark, built_index, oracle_standard,
+                                    shape, monkeypatch):
+    """Both scoring shapes — decoded (JVM) and cogroup — and both
+    df-lookup modes: search (default and pruned), search_many and
+    search_many_rows == oracle, scores bit for bit.  past_cap forces the
+    decoded-postings cap to 0, so a warmed handle runs the cogroup shape;
+    df_lookup forces the term dictionary preload cap to 0, so dfs come
     from per-query lookups (and the cap counts postings by aggregate)."""
     from clinical_trial_searchengine_spark.engine import SearchEngine
+    from clinical_trial_searchengine_spark.plans import query as qmod
 
+    if shape == "past_cap":
+        monkeypatch.setattr(qmod, "_DECODED_POSTINGS_CAP", 0)
+    elif shape == "df_lookup":
+        monkeypatch.setattr(qmod, "_PRELOAD_TERMS_CAP", 0)
     eng = SearchEngine(spark, built_index.index_dir)
     handle = eng.handle()
-    if shape == "warm_decoded":
-        handle.warm(postings=True)
-    elif shape == "warm_cogroup":
-        handle.warm(postings=True, decoded_postings_cap=0)
-    elif shape == "df_lookup":
-        handle.warm(postings=True, preload_terms_cap=0)
+    if shape != "cold":
+        handle.warm()
     assert (handle.decoded is not None) == (
         shape in ("warm_decoded", "df_lookup")
     )
-    assert handle._df_preloaded == (shape in ("warm_decoded", "warm_cogroup"))
+    assert handle._df_preloaded == (shape in ("warm_decoded", "past_cap"))
     try:
         qs = reference_queries()
         exp = {q["query_id"]: oracle_standard.search(q["text"], q["k"])
@@ -128,6 +130,22 @@ def test_rank_identity_norms_shapes(spark, built_index, oracle_standard, shape):
             many = [(d, s) for _, d, s in sorted(batch[qid])][:k]
             _assert_rank_identical(exp[qid], many, f"{shape}/many/{qid}",
                                    tol=0.0)
+    finally:
+        handle.close()
+
+
+def test_warm_caches_only_the_decoded_relation(spark, built_index):
+    """warm() leaves the postings and norms parquet scans uncached and
+    caches one relation, the decoded postings."""
+    from pyspark import StorageLevel
+
+    from clinical_trial_searchengine_spark.engine import SearchEngine
+
+    handle = SearchEngine(spark, built_index.index_dir).warm().handle()
+    try:
+        assert handle.postings.storageLevel == StorageLevel.NONE
+        assert handle.norms.storageLevel == StorageLevel.NONE
+        assert handle.decoded.storageLevel != StorageLevel.NONE
     finally:
         handle.close()
 

@@ -141,16 +141,17 @@ def test_compact_collapses_generations(spark, corpora, tmp_path):
 
 
 def test_multi_gen_warmed_handle(spark, corpora, tmp_path):
-    """warm() on a multi-generation index (co-partition by (gen, shard),
-    merged-term-dictionary preload, decoded relation with GLOBAL doc_ids)
-    must not change results: the decoded shape equals the cold cogroup
-    kernel and the warmed cogroup kernel, rows and scores."""
+    """warm() on a multi-generation index (merged-term-dictionary
+    preload, decoded relation with GLOBAL doc_ids) must not change
+    results: the decoded shape equals the cold cogroup kernel, and so
+    does the warmed handle's explicit-kernel search, which runs the
+    cogroup over the parquet scan — rows and scores."""
     part, full = corpora
     d = str(tmp_path / "warm")
     incremental_index(spark, part, d, shard_size=48)
     incremental_index(spark, full, d, shard_size=48)
     eng = SearchEngine(spark, d)
-    eng2 = SearchEngine(spark, d).warm(postings=True)
+    eng2 = SearchEngine(spark, d).warm()
     assert eng2.handle()._df_preloaded
     assert eng2.handle().decoded is not None
     for q in ["def license", "import streaming tokens", "the"]:

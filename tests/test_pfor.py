@@ -11,7 +11,6 @@ from hypothesis import strategies as st
 
 from clinical_trial_searchengine_spark.functions.codec import (
     BLOCK_SIZE,
-    decode_block,
     decode_blocks,
     decode_directory,
     decode_postings,
@@ -101,7 +100,7 @@ def test_pfor_group_byte_identical_to_single():
 
 
 def test_pfor_selective_decode_shared_directory():
-    """decode_directory + decode_blocks/decode_block work unchanged on a
+    """decode_directory + decode_blocks work unchanged on a
     v2 buffer (shared header/directory wire layout — WAND's skip logic is
     codec-agnostic)."""
     rng = np.random.default_rng(5)
@@ -131,7 +130,7 @@ def test_pfor_selective_decode_shared_directory():
     )
     assert np.array_equal(d, ids[rows])
     assert np.array_equal(t, tfs[rows].astype(np.int64))
-    d1, t1 = decode_block(buf, 3, n, firsts, nbytes, offsets)
+    d1, t1 = decode_blocks(buf, [3], n, firsts, nbytes, offsets)
     assert np.array_equal(d1, ids[384:512])
     assert np.array_equal(t1, tfs[384:512].astype(np.int64))
 

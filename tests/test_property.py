@@ -16,7 +16,7 @@ from clinical_trial_searchengine_spark.functions.analysis import (
     tokenize_text,
 )
 from clinical_trial_searchengine_spark.functions.codec import (
-    decode_block,
+    decode_blocks,
     decode_directory,
     decode_postings,
     encode_postings,
@@ -61,7 +61,7 @@ def test_postings_roundtrip_and_directory(pairs):
     assert n == len(ids) and len(firsts) == n_blocks
     got_ids, got_tfs = [], []
     for b in range(n_blocks):
-        bi, bt = decode_block(buf, b, n, firsts, nbytes, offsets)
+        bi, bt = decode_blocks(buf, [b], n, firsts, nbytes, offsets)
         got_ids.append(bi)
         got_tfs.append(bt)
         lo = b * 128

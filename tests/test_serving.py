@@ -21,7 +21,7 @@ WAIT_S = 30
 
 @pytest.fixture(scope="module")
 def server(built_index):
-    built_index.warm(postings=True)
+    built_index.warm()
     with built_index.serving() as srv:
         yield srv
 
