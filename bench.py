@@ -148,13 +148,15 @@ def main() -> None:
         per_q.append(dt)
 
     # -- 2b. scoring-kernel comparison on the warmed index -------------------
-    # "auto" is the DEFAULT search path: per-query df-adaptive choice
-    # between block-max 'pruned' (candidate pool >> k) and 'exhaustive'
-    # (rare-term queries, where skip bookkeeping is pure overhead) — this
-    # cell is the standing evidence auto <= min(pruned, exhaustive) on a
-    # mixed batch.  wand_ref is the DEMOTED doc-at-a-time Python reference
-    # (test-only oracle, never chosen by the default path); measured here
-    # for the record.  Six-query batches, one warm pass per kernel first.
+    # "auto" is the DEFAULT search path (kernel=None): on this warmed
+    # handle under the postings cap it times the decoded JVM shape, not a
+    # cogroup kernel, so kernel_auto_6q compares the two query shapes
+    # rather than proving auto <= min(pruned, exhaustive) (BENCH_r05 read
+    # auto 1.986 s against exhaustive 1.681 s).  'pruned'/'exhaustive' time
+    # the cogroup kernels over the parquet scan.  wand_ref is the DEMOTED
+    # doc-at-a-time Python reference (test-only oracle, never chosen by
+    # the default path); measured here for the record.  Six-query batches,
+    # one warm pass per kernel first.
     kq = list(reference_queries())[:6]
     for kern in ("auto", "pruned", "exhaustive", "wand_ref"):
         arg = None if kern == "auto" else kern

@@ -670,55 +670,31 @@ class IndexHandle:
     relation that default queries then score in the JVM
     (``self.decoded``), the one relation it caches.
 
-    Delta generations: when ``generations.json`` exists, postings/norms are
+    Delta generations (``segments.read_generations``): postings/norms are
     the union of every generation's segments tagged with a ``gen`` column,
-    meta's num_docs/avg_doc_len come from the MERGED stats table, and
-    per-term GLOBAL df is looked up in the merged term_stats (pruned to the
-    query terms — a tiny parquet scan).  Scores are then exactly the scores
-    a full rebuild would produce; only internal doc_id assignment (and thus
-    score-tie order) differs."""
+    meta's num_docs/avg_doc_len/total_terms are the global stats summed
+    from the generations' meta.json, and per-term GLOBAL df is looked up
+    in the global term dictionary (pruned to the query terms — a tiny
+    parquet scan).  Scores are then exactly the scores a full rebuild would
+    produce; only internal doc_id assignment (and thus score-tie order)
+    differs.  Opening a handle runs no Spark job."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self.meta = seg.read_meta(index_dir)
-        gens = seg.read_generations(index_dir)
-        self.multi_gen = bool(gens) and len(gens) > 1
-        if self.multi_gen:
-            self.bases = {int(g["gen"]): int(g["base"]) for g in gens}
-            p_parts, n_parts = [], []
-            for g in gens:
-                d = seg.gen_dir(index_dir, int(g["gen"]))
-                tag = F.lit(int(g["gen"])).alias("gen")
-                p_parts.append(
-                    spark.read.parquet(seg.path_of(d, seg.POSTINGS))
-                    .withColumn("gen", tag)
-                )
-                n_parts.append(
-                    spark.read.parquet(seg.path_of(d, seg.NORMS))
-                    .withColumn("gen", tag)
-                )
-            self.postings = reduce(DataFrame.unionByName, p_parts)
-            self.norms = reduce(DataFrame.unionByName, n_parts)
-            merged = spark.read.parquet(
-                seg.path_of(index_dir, seg.STATS_MERGED)
-            ).collect()[0]
-            self.meta = {
-                **self.meta,
-                "num_docs": int(merged["num_docs"]),
-                "avg_doc_len": float(merged["avg_doc_len"] or 0.0),
-                "total_terms": int(merged["total_terms"] or 0),
-            }
-            self._gens = gens
-        else:
-            self.bases = {0: 0}
-            self._gens = None
-            self.postings = spark.read.parquet(
-                seg.path_of(index_dir, seg.POSTINGS)
-            ).withColumn("gen", F.lit(0))
-            self.norms = spark.read.parquet(
-                seg.path_of(index_dir, seg.NORMS)
-            ).withColumn("gen", F.lit(0))
+        self.gens = seg.read_generations(index_dir)
+        self.meta = {
+            **seg.read_meta(index_dir),
+            **seg.global_stats(index_dir, self.gens),
+        }
+        self.bases = {int(g["gen"]): int(g["base"]) for g in self.gens}
+        self.postings = seg.scan_generations(
+            spark, index_dir, self.gens, seg.POSTINGS
+        )
+        self.norms = seg.scan_generations(
+            spark, index_dir, self.gens, seg.NORMS
+        )
+        self._term_stats = seg.term_stats_path(index_dir, self.gens)
         self._df_cache: dict[str, int] = {}
         self._df_preloaded = False
         # the cached (term, doc_id, norm) relation of the decoded shape —
@@ -742,12 +718,6 @@ class IndexHandle:
             seg.read_tombstones(index_dir), dtype=np.int64
         )
 
-    def _term_stats_path(self) -> str:
-        return seg.path_of(
-            self.index_dir,
-            seg.TERM_STATS_MERGED if self.multi_gen else seg.TERM_STATS,
-        )
-
     def global_dfs(self, terms) -> dict[str, int]:
         """{term: GLOBAL df} from the term dictionary (format v2: postings
         carry no df — like Lucene's term-metadata/posting-data split).
@@ -758,7 +728,7 @@ class IndexHandle:
         missing = [t for t in terms if t not in self._df_cache]
         if missing and not self._df_preloaded:
             rows = (
-                self.spark.read.parquet(self._term_stats_path())
+                self.spark.read.parquet(self._term_stats)
                 .where(F.col("term").isin(missing))
                 .select("term", "df")
                 .collect()
@@ -771,24 +741,9 @@ class IndexHandle:
     def doc_meta_df(self) -> DataFrame:
         """doc_meta across generations with GLOBAL doc_ids; tombstoned
         (superseded/deleted) docs are filtered out — invisible everywhere."""
-        if not self.multi_gen:
-            return self._drop_tombstoned(
-                self.spark.read.parquet(
-                    seg.path_of(self.index_dir, seg.DOC_META)
-                )
-            )
-        parts = []
-        for g in self._gens:
-            d = seg.gen_dir(self.index_dir, int(g["gen"]))
-            parts.append(
-                self.spark.read.parquet(seg.path_of(d, seg.DOC_META))
-                .withColumn(
-                    "doc_id", F.col("doc_id") + F.lit(int(g["base"]))
-                )
-            )
-        return self._drop_tombstoned(reduce(
-            lambda a, p: a.unionByName(p, allowMissingColumns=True), parts
-        ))
+        return self._drop_tombstoned(
+            seg.doc_meta_global(self.spark, self.index_dir, self.gens)
+        )
 
     def _drop_tombstoned(self, df: DataFrame) -> DataFrame:
         """Broadcast left-anti join against the tombstone ids: the plan
@@ -842,7 +797,7 @@ class IndexHandle:
         # plans built pre-warm reference the cogroup path; correct but
         # slow — rebuild them against the decoded relation
         self._plan_cache.clear()
-        ts = self.spark.read.parquet(self._term_stats_path())
+        ts = self.spark.read.parquet(self._term_stats)
         if ts.count() <= _PRELOAD_TERMS_CAP:
             self._df_cache = {
                 r["term"]: int(r["df"])
@@ -1301,10 +1256,14 @@ def search(
 ) -> DataFrame:
     """Top-k BM25. Returns DataFrame (doc_id, score [, repo/path/...]).
 
-    ``kernel``: None (default) picks adaptively by global df — 'pruned'
+    ``kernel``: None (default) scores on a warmed handle under the
+    postings cap (``handle.decoded`` set) in the JVM over the decoded
+    relation, with no kernel at all.  On a cold or past-cap handle None
+    picks the cogroup kernel adaptively by global df — 'pruned'
     (vectorized block-max skip) once the candidate pool dwarfs k, else
     'exhaustive' (decode-everything; rare-term queries never fill the heap
-    threshold, so skip bookkeeping is pure overhead there).  'wand_ref' is
+    threshold, so skip bookkeeping is pure overhead there).  A named
+    kernel always runs the cogroup shape.  'wand_ref' is
     the doc-at-a-time Python WAND, a test-only oracle (per-posting Python
     — correct but never a production win; kept for its equivalence
     property).  All kernels are rank-identical (equivalence-tested), so

@@ -20,6 +20,24 @@ to an Iceberg table — the write calls are isolated in this module so swapping
                      attempt, started_at, finished_at
     metrics/         stage, partition_id, metric, value
 
+Every index is a list of generations (:func:`read_generations`): the
+segment set above at the root is generation 0, and each incremental append
+adds generation K as the same segment set at ``gen=K/``, over only its
+delta rows, with doc_ids offset by the generation's ``base``.  The root
+may also hold
+
+    generations.json   [{gen, base, num_docs}, ...] (absent: generation 0
+                       alone)
+    term_stats_merged/ term, df, cf summed over the generations; exists iff
+                       there is more than one
+    tombstones.json    GLOBAL doc_ids masked by upsert/delete
+
+With several generations the global num_docs/total_terms are the sums of
+the generations' meta.json values (:func:`global_stats`).  This module is
+the one reader of that layout: :func:`scan_generations`,
+:func:`doc_meta_global`, :func:`term_stats_path` and :func:`global_stats`
+serve the query handle, incremental indexing and transcoding alike.
+
 The doc-sharded layout (index partitioned by document range, each shard
 holding its own posting lists) is what makes query-time scoring a
 per-partition bounded-heap kernel + global top-k merge (north rule), instead
@@ -33,9 +51,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clinical_trial_searchengine_spark.functions.codec import check_codec
 
 DOC_META = "doc_meta"
 STATS = "stats"
@@ -46,13 +67,12 @@ MANIFEST = "manifest"
 METRICS = "metrics"
 
 # -- delta generations (incremental indexing) --------------------------------
-# generation 0 lives at the index root (backward compatible); generation K>0
-# is a full, independently-resumable segment set over ONLY its delta rows at
+# generation 0 lives at the index root; generation K>0 is a full,
+# independently-resumable segment set over ONLY its delta rows at
 # index_dir/gen=K/ with doc_ids offset by `base` at query time.  Exact global
-# BM25 stats live in the merged tables below, refreshed on every append.
+# per-term stats live in the merged table below, refreshed on every append.
 GENERATIONS = "generations.json"
 TERM_STATS_MERGED = "term_stats_merged"
-STATS_MERGED = "stats_merged"
 
 # -- tombstones (upsert/delete between compactions) ---------------------------
 # GLOBAL doc_ids of superseded (re-committed (repo, path)) or deleted docs.
@@ -86,13 +106,75 @@ def gen_dir(index_dir: str, gen: int) -> str:
     return index_dir if gen == 0 else os.path.join(index_dir, f"gen={gen}")
 
 
-def read_generations(index_dir: str) -> list[dict] | None:
-    """[{gen, num_docs, base}, ...] ordered by gen, or None (single-gen)."""
+def read_generations(index_dir: str) -> list[dict]:
+    """[{gen, base, num_docs}, ...] ordered by gen.  An index without
+    ``generations.json`` is the single generation 0 at the root."""
     p = os.path.join(index_dir, GENERATIONS)
     if not os.path.exists(p):
-        return None
+        return [{"gen": 0, "base": 0,
+                 "num_docs": int(read_meta(index_dir)["num_docs"])}]
     with open(p) as f:
         return json.load(f)
+
+
+def scan_generations(spark: SparkSession, index_dir: str, gens: list[dict],
+                     name: str) -> DataFrame:
+    """Dataset ``name`` of every generation, one parquet scan each, tagged
+    with its ``gen`` and unioned (no Union node for a single generation).
+    Doc ids stay generation-local."""
+    return reduce(DataFrame.unionByName, [
+        spark.read.parquet(path_of(gen_dir(index_dir, int(g["gen"])), name))
+        .withColumn("gen", F.lit(int(g["gen"])))
+        for g in gens
+    ])
+
+
+def doc_meta_global(spark: SparkSession, index_dir: str,
+                    gens: list[dict]) -> DataFrame:
+    """doc_meta of every generation with GLOBAL doc_ids (``doc_id + base``
+    only where ``base != 0``).  Generations built with and without
+    ``content_sha256`` union with NULLs in the missing column."""
+    parts = []
+    for g in gens:
+        dm = spark.read.parquet(
+            path_of(gen_dir(index_dir, int(g["gen"])), DOC_META)
+        )
+        if int(g["base"]):
+            dm = dm.withColumn(
+                "doc_id", F.col("doc_id") + F.lit(int(g["base"]))
+            )
+        parts.append(dm)
+    return reduce(
+        lambda a, p: a.unionByName(p, allowMissingColumns=True), parts
+    )
+
+
+def term_stats_path(index_dir: str, gens: list[dict]) -> str:
+    """The global term dictionary (term, df, cf): generation 0's own
+    term_stats for a single generation; the merged table, which exists iff
+    there is more than one generation, otherwise."""
+    return path_of(
+        index_dir, TERM_STATS_MERGED if len(gens) > 1 else TERM_STATS
+    )
+
+
+def global_stats(index_dir: str, gens: list[dict]) -> dict:
+    """Global num_docs, avg_doc_len and total_terms, read on the driver:
+    the root meta.json values for a single generation, else the sums of
+    every generation's meta.json with ``avg_doc_len = total_terms /
+    num_docs`` — Python's correctly rounded division of the two integers,
+    the same double Spark's ``total_terms / num_docs`` gives."""
+    if len(gens) == 1:
+        meta = read_meta(index_dir)
+        return {k: meta[k] for k in ("num_docs", "avg_doc_len", "total_terms")}
+    metas = [read_meta(gen_dir(index_dir, int(g["gen"]))) for g in gens]
+    num_docs = sum(int(m["num_docs"]) for m in metas)
+    total_terms = sum(int(m["total_terms"]) for m in metas)
+    return {
+        "num_docs": num_docs,
+        "avg_doc_len": total_terms / num_docs if num_docs else 0.0,
+        "total_terms": total_terms,
+    }
 
 
 def write_generations(index_dir: str, gens: list[dict]) -> None:
@@ -307,14 +389,11 @@ def transcode_postings(
     """
     import shutil
 
-    assert postings_codec in ("varint", "pfor", "adaptive"), postings_codec
-    roots = [index_dir]
-    gens = read_generations(index_dir) or []
-    roots += [
-        gen_dir(index_dir, int(g["gen"])) for g in gens if int(g["gen"]) > 0
-    ]
+    check_codec(postings_codec)
+    gens = read_generations(index_dir)
     total_rows = 0
-    for root in roots:
+    for g in gens:
+        root = gen_dir(index_dir, int(g["gen"]))
         meta = read_meta(root)
         src = path_of(root, POSTINGS)
         tmp = src + "__transcode_tmp"
@@ -353,7 +432,7 @@ def transcode_postings(
         meta["postings_codec"] = postings_codec
         write_meta(root, meta)
     return {
-        "dirs": len(roots),
+        "dirs": len(gens),
         "rows": total_rows,
         "codec": postings_codec,
     }

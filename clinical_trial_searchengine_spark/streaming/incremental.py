@@ -3,11 +3,14 @@
 v2 semantics (replaces the v1 full-rebuild): rows not yet indexed (anti-join
 on the stable (repo, path, commit) key against every generation's doc_meta)
 are built into a NEW generation — a full, independently manifest-resumable
-segment set over ONLY the delta at ``index_dir/gen=K/`` — and the exact
-global BM25 stats (num_docs, avg_doc_len, per-term df/cf) are re-merged into
-tiny top-level tables.  Queries union the generations' postings/norms and
-broadcast the merged stats, so scores are EXACTLY what a full rebuild would
-produce (only internal doc_id assignment, hence score-tie order, differs).
+segment set over ONLY the delta at ``index_dir/gen=K/``.  Each append
+rewrites one top-level table, ``term_stats_merged/`` (per-term df/cf summed
+over the generations); num_docs and total_terms are summed from the
+generations' meta.json on the driver (``segments.global_stats``).  Queries
+union the generations' postings/norms and score with these exact global
+stats, so scores are EXACTLY what a full rebuild would produce (only
+internal doc_id assignment, hence score-tie order, differs).  The
+generation layout is read only through ``plans/segments.py``.
 
 At 100 TB this is the only viable shape: an append of 0.1% of the corpus
 costs one build over 0.1% of the rows plus a terms-level merge, instead of
@@ -36,52 +39,17 @@ _KEY = ["repo", "path", "commit"]
 
 def _merge_global_stats(spark: SparkSession, index_dir: str,
                         gens: list[dict]) -> dict:
-    """Re-derive exact global stats from the per-generation tables (term-
-    and single-row-level inputs — cheap at any corpus size) and write the
-    merged tables the query path broadcasts."""
-    ts_parts = [
-        spark.read.parquet(
-            seg.path_of(seg.gen_dir(index_dir, int(g["gen"])), seg.TERM_STATS)
-        )
-        for g in gens
-    ]
-    ts = ts_parts[0]
-    for p in ts_parts[1:]:
-        ts = ts.unionByName(p)
+    """Write the merged term dictionary (per-term df/cf summed over the
+    generations — a terms-level input, cheap at any corpus size) and return
+    the global stats, summed on the driver from the generations' meta."""
     (
-        ts.groupBy("term")
+        seg.scan_generations(spark, index_dir, gens, seg.TERM_STATS)
+        .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         .write.mode("overwrite")
         .parquet(seg.path_of(index_dir, seg.TERM_STATS_MERGED))
     )
-    st_parts = [
-        spark.read.parquet(
-            seg.path_of(seg.gen_dir(index_dir, int(g["gen"])), seg.STATS)
-        )
-        for g in gens
-    ]
-    st = st_parts[0]
-    for p in st_parts[1:]:
-        st = st.unionByName(p)
-    merged = st.agg(
-        F.sum("num_docs").alias("num_docs"),
-        F.sum("total_terms").alias("total_terms"),
-    ).select(
-        "num_docs",
-        (F.col("total_terms") / F.col("num_docs")).alias("avg_doc_len"),
-        "total_terms",
-    )
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        seg.path_of(index_dir, seg.STATS_MERGED)
-    )
-    row = spark.read.parquet(
-        seg.path_of(index_dir, seg.STATS_MERGED)
-    ).collect()[0]
-    return {
-        "num_docs": int(row["num_docs"]),
-        "avg_doc_len": float(row["avg_doc_len"] or 0.0),
-        "total_terms": int(row["total_terms"] or 0),
-    }
+    return seg.global_stats(index_dir, gens)
 
 
 def incremental_index(
@@ -115,15 +83,8 @@ def incremental_index(
         return out
 
     meta = seg.read_meta(index_dir)
-    gens = seg.read_generations(index_dir) or [
-        {"gen": 0, "num_docs": int(meta["num_docs"]), "base": 0}
-    ]
-    seen = None
-    for g in gens:
-        dm = spark.read.parquet(
-            seg.path_of(seg.gen_dir(index_dir, int(g["gen"])), seg.DOC_META)
-        ).select(*_KEY)
-        seen = dm if seen is None else seen.unionByName(dm)
+    gens = seg.read_generations(index_dir)
+    seen = seg.doc_meta_global(spark, index_dir, gens).select(*_KEY)
     new = corpus.join(seen, _KEY, "left_anti")
     n_new = new.count()
 
@@ -146,9 +107,7 @@ def incremental_index(
         return out
 
     if n_new == 0:
-        meta = dict(meta)
-        meta["new_docs"] = 0
-        return meta
+        return {**meta, **seg.global_stats(index_dir, gens), "new_docs": 0}
 
     # -- automatic compaction check (policy above) --
     if max_generations is not None:
@@ -195,32 +154,6 @@ def _append_generation(spark, new, index_dir, meta, gens, gen_k, n_new,
     return result
 
 
-def _doc_meta_global(spark: SparkSession, index_dir: str,
-                     gens: list[dict]) -> DataFrame:
-    """(gdoc_id, repo, path, commit) across generations — GLOBAL ids."""
-    parts = []
-    for g in gens:
-        dm = spark.read.parquet(
-            seg.path_of(seg.gen_dir(index_dir, int(g["gen"])), seg.DOC_META)
-        )
-        parts.append(
-            dm.select(
-                (F.col("doc_id") + F.lit(int(g["base"]))).alias("gdoc_id"),
-                *_KEY,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _gens_of(index_dir: str, meta: dict) -> list[dict]:
-    return seg.read_generations(index_dir) or [
-        {"gen": 0, "num_docs": int(meta["num_docs"]), "base": 0}
-    ]
-
-
 def upsert_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -246,9 +179,9 @@ def upsert_index(
     if not os.path.exists(os.path.join(index_dir, "meta.json")):
         return incremental_index(spark, corpus, index_dir, **kwargs)
 
-    meta = seg.read_meta(index_dir)
-    gens = _gens_of(index_dir, meta)
-    existing = _doc_meta_global(spark, index_dir, gens)
+    existing = seg.doc_meta_global(
+        spark, index_dir, seg.read_generations(index_dir)
+    )
     new = corpus.join(existing.select(*_KEY), _KEY, "left_anti")
     # old versions of re-committed (repo, path) keys -> tombstones.
     # Bounded by churn between compactions (same policy that caps generation
@@ -256,7 +189,7 @@ def upsert_index(
     superseded = existing.join(
         new.select("repo", "path").distinct(), ["repo", "path"], "left_semi"
     )
-    tomb_ids = [int(r["gdoc_id"]) for r in superseded.select("gdoc_id").collect()]
+    tomb_ids = [int(r["doc_id"]) for r in superseded.select("doc_id").collect()]
 
     out = incremental_index(spark, corpus, index_dir, **kwargs)
     if out.get("compacted") or kwargs.get("full_rebuild"):
@@ -280,13 +213,13 @@ def delete_documents(
     :func:`upsert_index`; re-adding a deleted (repo, path, commit) triple
     requires a new commit or a compaction (the seen-key anti-join skips
     exact re-adds by design — idempotent ingest)."""
-    meta = seg.read_meta(index_dir)
-    gens = _gens_of(index_dir, meta)
-    existing = _doc_meta_global(spark, index_dir, gens)
+    existing = seg.doc_meta_global(
+        spark, index_dir, seg.read_generations(index_dir)
+    )
     hit = existing.join(
         keys.select("repo", "path").distinct(), ["repo", "path"], "left_semi"
     )
-    tomb_ids = [int(r["gdoc_id"]) for r in hit.select("gdoc_id").collect()]
+    tomb_ids = [int(r["doc_id"]) for r in hit.select("doc_id").collect()]
     if tomb_ids:
         seg.write_tombstones(
             index_dir, seg.read_tombstones(index_dir) + tomb_ids

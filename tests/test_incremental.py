@@ -4,8 +4,10 @@ full-rebuild on append, idempotency, top-k paths over multi-gen indexes."""
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clinical_trial_searchengine_spark.engine import SearchEngine
@@ -75,6 +77,7 @@ def test_append_matches_full_rebuild_scores(spark, corpora, tmp_path):
     # idempotency: same corpus again -> no new generation
     m2 = incremental_index(spark, full, d_inc, shard_size=48)
     assert m2["new_docs"] == 0
+    assert m2["num_docs"] == 160
     assert len(seg.read_generations(d_inc)) == 2
 
 
@@ -159,6 +162,105 @@ def test_multi_gen_warmed_handle(spark, corpora, tmp_path):
         assert cold and eng2.search_topk_rows(q, 10) == cold
         assert eng2.search_topk_rows(q, 10, kernel="exhaustive") == cold
     eng2.handle().close()
+
+
+def test_merged_stats_equal_spark_reference(spark, tmp_path):
+    """Global stats of a 2- and a 3-generation index, summed on the driver
+    from the generations' meta.json, equal (==) the Spark aggregate over
+    the generations' stats/ tables: sum(total_terms) / sum(num_docs) —
+    for the incremental result, for global_stats and for an opened
+    handle's meta.  No stats table is written at the root."""
+    full = generate_corpus_pandas(200, seed=13)
+    d = str(tmp_path / "stats")
+    for n in (100, 150, 200):
+        out = incremental_index(
+            spark, spark.createDataFrame(full.iloc[:n]), d,
+            shard_size=48, max_generations=None,
+        )
+        gens = seg.read_generations(d)
+        assert len(gens) == n // 50 - 1
+        if len(gens) == 1:
+            continue
+        st = reduce(DataFrame.unionByName, [
+            spark.read.parquet(
+                seg.path_of(seg.gen_dir(d, g["gen"]), seg.STATS)
+            )
+            for g in gens
+        ])
+        row = st.agg(
+            F.sum("num_docs").alias("num_docs"),
+            F.sum("total_terms").alias("total_terms"),
+        ).select(
+            "num_docs",
+            (F.col("total_terms") / F.col("num_docs")).alias("avg_doc_len"),
+            "total_terms",
+        ).collect()[0]
+        ref = {k: row[k] for k in ("num_docs", "avg_doc_len", "total_terms")}
+        assert ref["num_docs"] == n
+        assert seg.global_stats(d, gens) == ref
+        assert {k: out[k] for k in ref} == ref
+        meta = IndexHandle(spark, d).meta
+        assert {k: meta[k] for k in ref} == ref
+        assert not os.path.exists(os.path.join(d, "stats_merged"))
+
+
+def test_mixed_schema_generations(spark, corpora, tmp_path):
+    """A base built with content_sha256 plus a delta built without it:
+    doc_meta_df() unions them (delta sha NULL), delete and upsert still
+    tombstone by key in either generation, and search equals
+    search_all's top-k."""
+    part, full = corpora
+    pdf = full.toPandas()
+    d = str(tmp_path / "mixed")
+    eng = SearchEngine(spark, d)
+    eng.add_documents(part, shard_size=48)
+    eng.add_documents(full.drop("content_sha256"), shard_size=48)
+    assert len(seg.read_generations(d)) == 2
+
+    dm = {r["doc_id"]: r for r in eng.handle().doc_meta_df().collect()}
+    assert sorted(dm) == list(range(160))
+    assert all(dm[i]["content_sha256"] is not None for i in range(100))
+    assert all(dm[i]["content_sha256"] is None for i in range(100, 160))
+    id_of = {(r["repo"], r["path"], r["commit"]): i for i, r in dm.items()}
+
+    def top_equals_search_all(q):
+        scores = {
+            r["doc_id"]: r["score"] for r in eng.search_all(q).collect()
+        }
+        exp = sorted(scores.items(), key=lambda e: (-e[1], e[0]))[:10]
+        assert eng.search_topk_rows(q, 10) == exp
+        return scores
+
+    for q in QUERIES:
+        top_equals_search_all(q)
+
+    # delete one doc of each generation by (repo, path)
+    gone = pdf.iloc[[5, 120]][["repo", "path"]]
+    gone_ids = {
+        id_of[k] for k in zip(pdf["repo"], pdf["path"], pdf["commit"])
+        if (k[0], k[1]) in set(zip(gone["repo"], gone["path"]))
+    }
+    assert {id_of[tuple(pdf.iloc[i][["repo", "path", "commit"]])]
+            for i in (5, 120)} <= gone_ids
+    out = eng.delete_documents(spark.createDataFrame(gone))
+    assert out["deleted"] == len(gone_ids)
+
+    # upsert: re-commit one delta-generation doc (schema without sha)
+    upd = pdf.drop(columns=["content_sha256"])
+    old_key = tuple(upd.iloc[130][["repo", "path", "commit"]])
+    upd.loc[130, "commit"] = upd.loc[130, "commit"] + "beef"
+    upd.loc[130, "content"] = upd.loc[130, "content"] + " zzzmixedmarker"
+    eng.upsert_documents(spark.createDataFrame(upd), shard_size=48)
+    assert len(seg.read_generations(d)) == 3
+
+    masked = gone_ids | {id_of[old_key]}
+    live = {r["doc_id"] for r in eng.handle().doc_meta_df().collect()}
+    assert live == (set(range(160)) - masked) | {160}
+    for q in QUERIES:
+        assert not masked & set(top_equals_search_all(q))
+    assert [d_ for d_, _ in eng.search_topk_rows("zzzmixedmarker", 10)] == [
+        160
+    ]
 
 
 def test_auto_compaction_policy(spark, tmp_path):

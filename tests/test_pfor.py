@@ -323,6 +323,35 @@ def test_transcode_postings_roundtrip(
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_unknown_codec_raises_everywhere(spark, small_corpus_df, tmp_path):
+    """A codec typo raises ValueError naming the three codecs in both
+    encoders, in build_index before anything is written, and in
+    transcode_postings — never a silent varint fallback."""
+    import os
+
+    import pytest
+
+    from clinical_trial_searchengine_spark.plans.build import build_index
+    from clinical_trial_searchengine_spark.plans.segments import (
+        transcode_postings,
+    )
+
+    ids = np.array([3, 9, 40], dtype=np.uint64)
+    tfs = np.array([1, 2, 1], dtype=np.uint64)
+    msg = "varint, pfor, adaptive"
+    with pytest.raises(ValueError, match=msg):
+        encode_postings(ids, tfs, codec="pfro")
+    with pytest.raises(ValueError, match=msg):
+        encode_postings_group(ids, tfs, np.array([0, 3]), codec="pfro")
+    d = str(tmp_path / "typo")
+    with pytest.raises(ValueError, match=msg):
+        build_index(spark, small_corpus_df, d, postings_codec="pfro")
+    assert not os.path.exists(os.path.join(d, "meta.json"))
+    assert not os.path.exists(d)
+    with pytest.raises(ValueError, match=msg):
+        transcode_postings(spark, d, "pfro")
+
+
 def test_adaptive_codec_routes_per_term():
     """codec="adaptive": terms below ADAPTIVE_PFOR_MIN stay varint (v1),
     others get pfor frames (v2); group output is byte-identical to
